@@ -43,7 +43,7 @@ class LogVectorEngine:
         """Scan -> chunk -> embed -> store (reference index.py main)."""
         from tools.index_cli import build_index
 
-        self._ask_fn = None  # store changed; rebind retrieval lazily
+        # no ask rebind: the query fn re-reads the store when its listing changes
         return build_index(
             self.spark, repo_dir, self.store_path, chunk_size=chunk_size, append=append, **kw
         )

@@ -20,6 +20,8 @@ SYSTEM_PROMPT = (
     "about log files using the provided context."
 )
 PROMPT_TEMPLATE = "Context:\n{context}\n\nQuestion: {question}\n\nAnswer:"
+# between two formatted hits in the assembled context
+CONTEXT_SEP = "\n\n"
 
 
 def format_hits(hits: DataFrame, source_col: str = "source", index_col: str = "chunk_index",
@@ -52,7 +54,7 @@ def assemble_context(hits: DataFrame, rank_col: str = "rank") -> DataFrame:
                 F.array_sort(F.collect_list(F.struct(F.col(rank_col), F.col("formatted")))),
                 lambda s: s.formatted,
             ),
-            "\n\n",
+            CONTEXT_SEP,
         ).alias("context")
     )
 

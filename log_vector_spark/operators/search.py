@@ -8,10 +8,14 @@ Spark-first re-expression (SURVEY §2.5 Q1):
   ``orderBy(desc).limit(k)`` — Catalyst plans TakeOrderedAndProject, a true
   distributed top-k: each partition keeps a k-heap, the driver merges k*P
   rows.  No global sort, no shuffle of the full table.  At 100 TB this scan
-  is embarrassingly parallel and the result transfer is O(k).
+  is embarrassingly parallel and the result transfer is O(k).  This is the
+  path that serves the Q&A REPL (tools/ask.make_query_fn): one job per
+  question, with the chunk text carried through the heaps.
 * batch top-k per query: broadcast the (small) query set, crossJoin, then
   Window.partitionBy(query).orderBy(desc(score)) + row_number <= k.  The
-  only shuffle is on query_id — bounded by #queries, not table size.
+  only shuffle is on query_id — bounded by #queries, not table size.  For
+  real multi-query batches (the registry's recall probes), not one
+  interactive question.
 * similarity self-join: blocked (equi-key prefilter) so Catalyst plans a
   shuffled hash/sort-merge join on the block key instead of a cartesian
   product; the exact-threshold filter runs inside the join stage.
@@ -55,14 +59,22 @@ def knn_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """Exact top-k cosine k-NN for one query vector (reference ask.py:200-203).
 
-    Returns (id, score) ordered best-first.  The plan is a single parquet
-    scan + codegen'd projection + TakeOrderedAndProject — O(k) driver data.
+    Returns (id, *carry, score) ordered best-first.  The plan is a single
+    parquet scan + codegen'd projection + TakeOrderedAndProject — O(k)
+    driver data.  ``carry`` names payload columns (e.g. a chunk's text)
+    that ride through the per-partition heaps, so a caller that needs them
+    for the k winners does not join back to the table.
     """
     scored = score_against(vectors, query_vec, vec_col)
-    return scored.select(id_col, "score").orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    return (
+        scored.select(id_col, *carry, "score")
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
 
 
 def knn_matryoshka_rerank(
@@ -365,6 +377,12 @@ def ivf_assign(
     the scan's split count (thousands of tasks at 100 TB), and at write
     time the result is persisted partitioned by `list_id` so queries
     prune partitions instead of scanning.
+
+    The centroids are a BUILD-time snapshot: they are collected when this
+    function is called, not when the returned DataFrame runs.  A caller
+    that keeps the frame and runs it after the centroid store changes
+    assigns against the old centroids, so lifecycle paths (retrain,
+    maintenance ticks) must call ivf_assign again after each change.
     """
     from log_vector_spark.functions.argmin import ivf_assign_arrow
 

@@ -24,18 +24,21 @@ designed for.  This module persists each family's artifacts once per
   only, never the IVF-blocked pair build.
 
 Stores are built at most once per process per (sf_dir, kind) into a fresh
-temp directory (no cross-process staleness: a new process re-derives from
-the parquet inputs; at scale these are real tables maintained by the
-streaming ingest — run_stream_ivf_ingest already lands the identical IVF
-layout).  All stored vector columns round-trip parquet bit-exactly
-(float/double arrays), so stored-query results are byte-identical to the
-inline forms and share their oracles.
+temp directory, removed when the process exits (no cross-process
+staleness: a new process re-derives from the parquet inputs; at scale
+these are real tables maintained by the streaming ingest —
+run_stream_ivf_ingest already lands the identical IVF layout).  All
+stored vector columns round-trip parquet bit-exactly (float/double
+arrays), so stored-query results are byte-identical to the inline forms
+and share their oracles.
 """
 
 from __future__ import annotations
 
+import atexit
 import decimal as _decimal
 import os
+import shutil
 import tempfile
 from collections.abc import Sequence
 
@@ -73,6 +76,7 @@ def _ensure(spark: SparkSession, sf_dir: str, kind: str, builder) -> str:
     if path is not None and os.path.exists(os.path.join(path, "_BUILT")):
         return path
     path = tempfile.mkdtemp(prefix=f"lvs_{kind}_store_")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
     builder(spark, sf_dir, path)
     with open(os.path.join(path, "_BUILT"), "w") as fh:
         fh.write(kind)

@@ -21,8 +21,10 @@ Layout decisions for 100 TB:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 from datetime import datetime, timezone
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from log_vector_spark.functions.vector import l2_norm, l2_normalize
@@ -99,6 +101,56 @@ def upsert_chunks(
 def read_chunks(spark: SparkSession, path: str) -> DataFrame:
     """S5: load the chunk table; hard error if absent (reference ask.py:66-82)."""
     return spark.read.parquet(os.path.join(path, "chunks"))
+
+
+def _chunks_listing(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(path, size, mtime_ns) of every file under the chunk table, sorted.
+
+    Driver-side os.walk/os.stat, no Spark job, so the store must be on a
+    local or mounted file system.  Any write to the table (overwrite,
+    append, compaction) adds, removes or rewrites a file, so the listing
+    changes; a missing table lists as ().
+    """
+    out = []
+    for root, _dirs, files in os.walk(os.path.join(path, "chunks")):
+        for name in files:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            out.append((full, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+class CachedChunks:
+    """A session's column-pruned view of one chunk store, read once and
+    kept in executor memory until the store changes on disk (the session
+    reuse of the EDBT 2020 incremental top-k framework: an interactive
+    session asks many questions of one store).
+
+    ``get()`` compares the store's listing with the one the cached
+    relation was read from; on a change it unpersists the old relation
+    and re-reads the store.  MEMORY_ONLY keeps the cache inside Spark's
+    storage pool: blocks that do not fit are recomputed from parquet, so a
+    store larger than memory costs one scan per use and no local-disk
+    copy.  Construction reads the store, so a missing store fails there.
+    """
+
+    def __init__(self, spark: SparkSession, path: str, cols: Sequence[str]):
+        self.spark, self.path, self.cols = spark, path, tuple(cols)
+        self._key = None
+        self._df = None
+        self.get()
+
+    def get(self) -> DataFrame:
+        key = _chunks_listing(self.path)
+        if key != self._key:
+            # unpersist first: the re-read plan equals the old one (same
+            # root path), so persisting it first would adopt the old data
+            if self._df is not None:
+                self._df.unpersist()
+                self._df = self._key = None
+            df = read_chunks(self.spark, self.path).select(*self.cols)
+            self._df, self._key = df.persist(StorageLevel.MEMORY_ONLY), key
+        return self._df
 
 
 def write_manifest(

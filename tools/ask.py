@@ -9,10 +9,21 @@ Loop semantics preserved:
   (ask.py:194, 254-255)
 * Ctrl-C -> graceful exit (ask.py:318-320)
 
-The retrieval path is the engine's: embed the question (E4 dispatch),
-`knn_topk` over the chunk table (Q1), `assemble_context` (Q2),
-`answer()` (Q3).  The loop itself is driver-side by design — SURVEY §2.5
-scopes the REPL as a driver loop, not an operator.
+The retrieval path is the engine's: embed the question (E4 dispatch), then
+ONE Spark job per question — `knn_topk` (Q1) over the chunk table with the
+hit's source, chunk index and text carried through the top-k, and the
+`format_hits` row expression (Q2) applied to the k winners only — then
+`answer()` (Q3).  The k formatted hits are joined on the driver with
+`CONTEXT_SEP`, skipping NULLs as `assemble_context`'s array_join does.
+
+The chunk table is read once per session into a column-pruned relation
+persisted MEMORY_ONLY (`sources.store.CachedChunks`).  Its cache key is the
+store's on-disk listing — every file's path, size and mtime_ns, read on the
+driver at each question with no Spark job — so a re-indexed or appended
+store is re-read on the next question and never served stale.
+
+The loop itself is driver-side by design — SURVEY §2.5 scopes the REPL as
+a driver loop, not an operator.
 
 Usage:  python tools/ask.py STORE_PATH [output_file.md]
 """
@@ -28,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 EXIT_WORDS = {"exit", "quit", "q"}
 TOP_K = 5  # reference ask.py:188 n_results=5
+HIT_COLS = ("source", "chunk_index", "document")  # what format_hits reads
 
 
 def make_query_fn(spark, store_path: str, generator=None) -> Callable[[str], str]:
@@ -36,31 +48,20 @@ def make_query_fn(spark, store_path: str, generator=None) -> Callable[[str], str
     Returns question -> answer-string; raises only on setup (missing store),
     matching the reference's constructor-time hard fail (ask.py:66-82).
     """
-    from pyspark.sql import functions as F
-
     from log_vector_spark.operators.embed import get_embedder
-    from log_vector_spark.operators.rag import answer, assemble_context
-    from log_vector_spark.operators.search import knn_batch_topk
-    from log_vector_spark.sources.store import read_chunks
+    from log_vector_spark.operators.rag import CONTEXT_SEP, answer, format_hits
+    from log_vector_spark.operators.search import knn_topk
+    from log_vector_spark.sources.store import CachedChunks
 
-    chunks = read_chunks(spark, store_path)  # hard error if absent (S5)
+    chunks = CachedChunks(spark, store_path, ("chunk_id", *HIT_COLS, "embedding"))  # S5
     embedder = get_embedder("deterministic")
 
     def query(question: str) -> str:
         try:
             qvec = embedder.embed_batch([question])[0]
-            qdf = spark.createDataFrame([(0, qvec)], "query_id int, query_vec array<double>")
-            hits = knn_batch_topk(
-                chunks,
-                qdf,
-                k=TOP_K,
-                vec_id="chunk_id",
-                vec_col="embedding",
-            ).join(chunks, "chunk_id")
-            ctx_row = assemble_context(
-                hits.select("rank", F.col("source"), F.col("chunk_index"), F.col("document"))
-            ).first()
-            context = ctx_row["context"] if ctx_row and ctx_row["context"] else ""
+            hits = knn_topk(chunks.get(), qvec, k=TOP_K, id_col="chunk_id", carry=HIT_COLS)
+            rows = format_hits(hits).select("formatted").collect()
+            context = CONTEXT_SEP.join(r.formatted for r in rows if r.formatted is not None)
             return answer(question, context, generator)
         except Exception as e:  # noqa: BLE001 - errors are strings, loop survives
             return f"Error generating answer: {e}"

@@ -14,13 +14,15 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the engine from the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -28,8 +30,6 @@ TABLES = (
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
