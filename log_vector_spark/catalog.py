@@ -108,10 +108,6 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: table(spark, name, sf_dir) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view for the SQL API."""
     for name in TABLES:

@@ -62,13 +62,6 @@ def bag_fingerprint(col: Column) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(col)))))
 
 
-def norm_text_fingerprint(col: Column) -> Column:
-    """Exact-dup key after whitespace/case normalization (reference stores
-    raw chunk text, index.py:369-373; normalizing first is the standard
-    exact-dedup upgrade)."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(col, " +", " "))))
-
-
 def token_count(col: Column) -> Column:
     return F.size(tokens(col)).cast("int")
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -221,21 +221,6 @@ def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
     denom = l2_norm(a, dim) * l2_norm(b, dim)
     sim = F.coalesce(F.try_divide(dot_product(a, b, dim), denom), F.lit(0.0))
     return F.when(a.isNull() | b.isNull(), F.lit(None).cast("double")).otherwise(sim)
-
-
-def infer_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Probe the fixed vector width from one row (None on an empty frame).
-
-    One limit-1 scan — a single row-group read even at 100 TB.  Pairs with
-    the ``dim=`` fast path above, which no operator enables by DEFAULT: the
-    unrolled expressions win ~30x inside broadcast-crossJoin/scan stages but
-    lose 2-3x inside shuffle-join stages and thrash the JIT code cache for
-    later queries (BASELINE.md lesson 7) — so the switch is a deliberate
-    per-callsite decision, not automatic.  Parity of the two paths is pinned
-    by tests/test_vector_fns.py.
-    """
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return int(row["d"]) if row and row["d"] is not None and row["d"] > 0 else None
 
 
 def literal_vector(values: Sequence[float]) -> Column:

@@ -44,10 +44,6 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in plan_string(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return plan_string(df).count("WholeStageCodegen")
-
-
 @contextmanager
 def no_size_broadcasts(spark):
     """Disable size-based broadcast-join selection for the duration.

@@ -16,7 +16,10 @@ chosen so the same plans run unchanged on a 1000-executor cluster against
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -55,3 +58,12 @@ def get_spark(app_name: str = "log_vector_spark", cpus: str | int | None = None)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_tempdir(prefix: str) -> str:
+    """A fresh temp dir that lives as long as this process: stores whose
+    lazy reads a query returns cannot be removed when the query returns,
+    so each one is removed at interpreter exit instead."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path

@@ -35,11 +35,8 @@ and share their oracles.
 
 from __future__ import annotations
 
-import atexit
 import decimal as _decimal
 import os
-import shutil
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +46,7 @@ from log_vector_spark.catalog import table
 from log_vector_spark.functions.vector import cosine_similarity, dot_product, literal_vector
 from log_vector_spark.operators import search
 from log_vector_spark.operators.search import SCORE_DP
+from log_vector_spark.session import session_tempdir
 
 _CACHE: dict[tuple[str, str], str] = {}
 
@@ -75,8 +73,7 @@ def _ensure(spark: SparkSession, sf_dir: str, kind: str, builder) -> str:
     path = _CACHE.get(key)
     if path is not None and os.path.exists(os.path.join(path, "_BUILT")):
         return path
-    path = tempfile.mkdtemp(prefix=f"lvs_{kind}_store_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = session_tempdir(f"lvs_{kind}_store_")
     builder(spark, sf_dir, path)
     with open(os.path.join(path, "_BUILT"), "w") as fh:
         fh.write(kind)

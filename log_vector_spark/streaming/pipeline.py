@@ -17,20 +17,187 @@ implements BOTH: complete-mode native session windows (bit-equal to the
 batch `session_window_agg`) and watermarked append mode, which only emits
 sessions already sealed by the watermark (late data past the delay is
 dropped — the at-scale memory bound on session state).
+
+Every driver is a short body over four shared pieces: `file_stream` (the
+parquet file source), `run_epochs` / `run_to_memory` (start, drain, stop),
+`epoch_write` (the epoch sink write) and `read_artifact` (read-back).
+
+Exactly-once rule (every `foreachBatch` sink): source offsets are
+checkpointed, so a re-invocation with the same checkpoint resumes from the
+last committed offset instead of re-ingesting; and every epoch's output
+is written by `epoch_write` as a dynamic partition overwrite keyed by
+``epoch`` (innermost partition level), so a replayed or retried epoch
+REPLACES exactly its own leaves instead of appending a duplicate.  A
+crash between two artifact writes of one epoch therefore cannot
+double-count either.  Empty micro-batches reach no sink (`run_epochs`
+skips them): there is nothing to replace, and an all-empty partitioned
+write would leave a dir with no schema to infer.
+
+Layout policy (`epoch_write`), so each epoch leaves one file per leaf,
+not one sliver per task (r11; every later epoch and every query-time fold
+re-reads these files — optimization guide §6.2):
+
+* ``BOUNDED`` — a delta whose size is bounded by a constant (sketch
+  registers, stats rows, Bloom bits): ``coalesce(1)``, 1 file per epoch;
+* a key column — ``repartition(col)`` and that column as the LEADING
+  partition level, so query-time pruning on it is unchanged: 1 file per
+  (key, epoch) leaf;
+* ``None`` — the frame's own partitioning (corpus-scaled outputs that
+  are already spread for their compute).
 """
 
 from __future__ import annotations
 
 import itertools
+import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from log_vector_spark.operators.events import tumbling_window
 
 _COUNTER = itertools.count()
 
 _EVENTS_COLS = "event_id long, {ts}, user_id long, event_type string, value double, props string"
+EVENTS_SCHEMA = _EVENTS_COLS.format(ts="ts timestamp")
+DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
+
+BOUNDED = "bounded"
+
+_MISSING = (
+    "PATH_NOT_FOUND",
+    "Path does not exist",
+    "UNABLE_TO_INFER_SCHEMA",
+    "Unable to infer schema",
+)
+
+
+# -- the shared epoch-sink pieces --------------------------------------------
+
+
+def file_stream(
+    spark: SparkSession,
+    schema: str,
+    path: str,
+    glob: str | None = None,
+    max_files: int | None = None,
+    where: str | None = None,
+) -> DataFrame:
+    """Streaming parquet source over the files of `path` (streaming file
+    sources need a directory and a declared schema).  `glob` narrows it to
+    matching file names, `max_files` caps files per micro-batch, and
+    `where` is a scan-stage predicate pushed to the source."""
+    reader = spark.readStream.schema(schema)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    src = reader.parquet(path)
+    return src.filter(where) if where else src
+
+
+def _drain(query, advance: Callable | None = None) -> None:
+    """Run a started query until its input is consumed, then stop it.
+    ``advance``, when given, is called between two drains so callers can
+    land more input (late or duplicate batches) deterministically."""
+    try:
+        query.processAllAvailable()
+        if advance is not None:
+            advance()
+            query.processAllAvailable()
+    finally:
+        query.stop()
+
+
+def run_epochs(
+    src: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint: str | None = None,
+    advance: Callable | None = None,
+) -> None:
+    """Drive `src` through the foreachBatch `sink` to completion.  Empty
+    micro-batches never reach the sink.  Without a `checkpoint` Spark uses
+    a throwaway one (no resume across invocations)."""
+
+    def guarded(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(batch_df, epoch_id)
+
+    writer = src.writeStream
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    _drain(writer.foreachBatch(guarded).start(), advance)
+
+
+def run_to_memory(
+    df: DataFrame, mode: str, prefix: str, advance: Callable | None = None
+) -> DataFrame:
+    """Drive `df` into a uniquely named memory sink in output `mode` and
+    return the sink table — the synchronous form tests and oracles use."""
+    name = f"{prefix}_{next(_COUNTER)}"
+    _drain(df.writeStream.outputMode(mode).format("memory").queryName(name).start(), advance)
+    return df.sparkSession.table(name)
+
+
+def _overwrite_partitions(df: DataFrame, path: str, cols: tuple[str, ...]) -> None:
+    """Dynamic partition overwrite, requested PER WRITE via the writer
+    option (which takes precedence over — and never mutates — the session
+    conf): under static mode the overwrite would delete every partition
+    this write does not touch."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(path)
+    )
+
+
+def epoch_write(df: DataFrame, path: str, epoch_id: int, layout: str | None = None) -> None:
+    """Write one epoch's output under `path` as ``epoch=<epoch_id>`` leaves,
+    replacing exactly those leaves (the module's exactly-once rule), with
+    the module's layout policy: ``BOUNDED``, a key column, or None."""
+    keys: tuple[str, ...] = ()
+    if layout == BOUNDED:
+        df = df.coalesce(1)
+    elif layout is not None:
+        df = df.repartition(F.col(layout))
+        keys = (layout,)
+    _overwrite_partitions(df.withColumn("epoch", F.lit(epoch_id)), path, (*keys, "epoch"))
+
+
+def _absent(path: str) -> bool:
+    """True when a local `path` does not exist; URI paths are assumed
+    present (their reads handle absence)."""
+    return "://" not in path and not os.path.isdir(path)
+
+
+def read_artifact(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a parquet artifact back, or None when it is missing.
+
+    Missing means the dir is absent OR holds no data file: an aborted first
+    epoch, or an all-empty partitioned write, leaves a dir with no schema to
+    infer.  Local paths are checked on the filesystem, skipping the hidden
+    ``_``/``.`` names Spark skips, so a missing artifact costs no read.  URI
+    stores (s3://, hdfs://) cannot be listed from the driver, so their read
+    is attempted and the same two failures map to None."""
+    from pyspark.errors import AnalysisException
+
+    if "://" not in path:
+        for _root, dirs, files in os.walk(path):
+            if any(not f.startswith(("_", ".")) for f in files):
+                return spark.read.parquet(path)
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if not any(t in str(e) for t in _MISSING):
+            raise
+        return None
+
+
+# -- drivers -----------------------------------------------------------------
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,8 +209,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     as raw longs (nanosAsLong) and converted, a TIMESTAMP(MICROS) file is
     read natively.  Footer probe is one driver-side metadata read.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     from log_vector_spark.catalog import _ensure_read_confs
@@ -58,20 +223,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in sorted(os.listdir(table_path))
             if f.endswith(".parquet")
         )
-        ts_type = pq.read_schema(probe).field("ts").type
-        nanos = getattr(ts_type, "unit", None) == "ns"
-        schema = _EVENTS_COLS.format(ts="ts long" if nanos else "ts timestamp")
-        src = spark.readStream.schema(schema).parquet(table_path)
+        path, glob = table_path, None
     else:
-        ts_type = pq.read_schema(table_path).field("ts").type
-        nanos = getattr(ts_type, "unit", None) == "ns"
-        schema = _EVENTS_COLS.format(ts="ts long" if nanos else "ts timestamp")
         # streaming file sources need a directory; glob-filter to the one table
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+        probe, path, glob = table_path, sf_dir, "events.parquet"
+    nanos = getattr(pq.read_schema(probe).field("ts").type, "unit", None) == "ns"
+    schema = _EVENTS_COLS.format(ts="ts long") if nanos else EVENTS_SCHEMA
+    src = file_stream(spark, schema, path, glob)
     if nanos:
         src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return src
@@ -80,19 +238,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_events_window_stream(spark: SparkSession, sf_dir: str, minutes: int = 15) -> DataFrame:
     """Drive the streaming windowed rollup to completion synchronously and
     return the result table — batch-equivalent by construction."""
-    name = f"stream_window_{next(_COUNTER)}"
     agg = tumbling_window(stream_events(spark, sf_dir), minutes=minutes)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", "stream_window")
 
 
 def run_events_session_stream(
@@ -112,40 +259,19 @@ def run_events_session_stream(
     """
     from log_vector_spark.operators.events import session_window_agg
 
-    name = f"stream_session_{next(_COUNTER)}"
     src = stream_events(spark, sf_dir)
     if watermark is not None:
         src = src.withWatermark("ts", watermark)
     agg = session_window_agg(src, gap_minutes=gap_minutes)
-    q = (
-        agg.writeStream.outputMode("complete" if watermark is None else "append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory(agg, "complete" if watermark is None else "append", "stream_session")
 
 
 def run_stream_index(spark: SparkSession, sf_dir: str, out_path: str, chunk_size: int = 400) -> int:
     """Streaming ETL: documents stream -> chunk (pandas_udf) -> embed
-    (pandas_udf) -> parquet sink via foreachBatch.  Returns rows written.
-    Exactly-once: checkpointed source offsets + per-epoch dynamic partition
-    overwrite (a replayed epoch replaces its own output)."""
-    import os
-
+    (pandas_udf) -> parquet sink via foreachBatch.  Returns rows written."""
     from log_vector_spark.operators.chunk import chunk_documents
     from log_vector_spark.operators.embed import DeterministicEmbedder
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     embedder = DeterministicEmbedder(dim=64)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -156,28 +282,10 @@ def run_stream_index(spark: SparkSession, sf_dir: str, out_path: str, chunk_size
         embedded = chunks.repartition(nparts, F.col("chunk_id")).withColumn(
             "embedding", embedder.embed_col(F.col("document"))
         )
-        # exactly-once: epoch-partitioned dynamic overwrite — a retried epoch
-        # REPLACES its own partition instead of appending a duplicate (the
-        # run_stream_quality_gate fix applied to the index sink)
-        (
-            embedded.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out_path)
-        )
+        epoch_write(embedded, out_path, epoch_id)
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    src = file_stream(spark, DOCS_SCHEMA, sf_dir, glob="documents.parquet")
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
     return spark.read.parquet(out_path).count()
 
 
@@ -198,18 +306,9 @@ def run_stream_dedup(
     ``advance``, when given, is called between processAllAvailable() calls so
     tests can append late/duplicate batches deterministically.
     """
-    name = f"stream_dedup_{next(_COUNTER)}"
-    src = spark.readStream.schema(schema).parquet(src_dir)
+    src = file_stream(spark, schema, src_dir)
     deduped = src.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(id_cols)
-    q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        if advance is not None:
-            advance()
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory(deduped, "append", "stream_dedup", advance)
 
 
 def run_stream_click_attribution(
@@ -251,13 +350,7 @@ def run_stream_click_attribution(
         & (clicks.c_ts > purchases.p_ts - F.expr(f"INTERVAL {window_minutes} MINUTES"))
         & (clicks.c_ts <= purchases.p_ts),
     ).select("purchase_id", "click_id", "user_id")
-    name = f"stream_attr_{next(_COUNTER)}"
-    q = j.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory(j, "append", "stream_attr")
 
 
 def run_stream_continuous_rollup(
@@ -273,13 +366,11 @@ def run_stream_continuous_rollup(
     Each micro-batch aggregates its own rows to per-(hour, event_type)
     PARTIAL states (count + exact-decimal sum — mergeable; an avg would
     not be), merges them with the stored partials for ONLY the touched
-    hours, and rewrites just those hour partitions.  Dynamic partition
-    overwrite is requested PER WRITE via the DataFrameWriter option (which
-    takes precedence over — and never mutates — the session conf): under
-    static mode the overwrite would delete every untouched hour partition,
-    so the mode must travel with the write, not with the session.  At
-    100 TB/day the write amplification per batch is the touched hours, not
-    table history.
+    hours, and rewrites just those hour partitions (a dynamic partition
+    overwrite: under static mode the overwrite would delete every
+    untouched hour partition, so the mode must travel with the write, not
+    with the session).  At 100 TB/day the write amplification per batch is
+    the touched hours, not table history.
 
     Replay safety: the additive merge is NOT idempotent, so each processed
     ``epoch_id`` is recorded as a marker under ``out_path/_epochs`` (an
@@ -291,10 +382,6 @@ def run_stream_continuous_rollup(
     `read_continuous_rollup` returns the exact schema of the batch
     `hourly_rollup`.
     """
-    import os
-
-    from pyspark.errors import AnalysisException
-
     epochs_dir = os.path.join(out_path, "_epochs")
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
@@ -307,39 +394,21 @@ def run_stream_continuous_rollup(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,6)")).alias("tv"),
         )
-        try:
-            existing = (
-                spark.read.parquet(out_path)
-                .join(partials.select("hour").distinct(), "hour", "left_semi")
-            )
+        stored = read_artifact(spark, out_path)
+        merged = partials
+        if stored is not None:
+            existing = stored.join(partials.select("hour").distinct(), "hour", "left_semi")
             merged = (
                 partials.unionByName(existing)
                 .groupBy("hour", "event_type")
                 .agg(F.sum("n").alias("n"), F.sum("tv").cast("decimal(18,6)").alias("tv"))
             )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            merged = partials
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("hour")
-            .parquet(out_path)
-        )
+        _overwrite_partitions(merged, out_path, ("hour",))
         os.makedirs(epochs_dir, exist_ok=True)
         with open(marker, "w") as fh:
             fh.write("")
 
-    src = spark.readStream.schema(schema).parquet(src_dir)
-    q = src.writeStream.foreachBatch(merge).start()
-    try:
-        q.processAllAvailable()
-        if advance is not None:
-            advance()
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    run_epochs(file_stream(spark, schema, src_dir), merge, advance=advance)
     return read_continuous_rollup(spark, out_path)
 
 
@@ -373,56 +442,27 @@ def run_stream_ivf_ingest(
     would scatter the same vector to different lists over time.  A real
     deployment re-trains centroids offline and rewrites the store when
     recall degrades (the compaction job is the natural place).  Assignment
-    is the same broadcast argmin as the batch path; foreachBatch appends
-    each micro-batch with dynamic partition placement.
+    is the same broadcast argmin as the batch path.
 
     Returns {'rows': total rows written, 'n_lists': centroid count}.
     """
     from log_vector_spark.operators.search import ivf_assign, make_centroids
 
-    emb_schema = "vec_id long, embedding array<float>, label int"
-    src = (
-        spark.readStream.schema(emb_schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(sf_dir)
-    )
-
     state: dict = {"centroids": None}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if state["centroids"] is None:
             state["centroids"] = make_centroids(batch_df).localCheckpoint(eager=True)
         assigned = ivf_assign(batch_df, state["centroids"])
-        # exactly-once: (list_id, epoch) dynamic-overwrite partitions — the
-        # hive layout keeps list_id as the FIRST partition level (query-time
-        # pruning unchanged) while a replayed epoch replaces exactly its own
-        # leaf partitions instead of appending duplicates
-        (
-            assigned.select("vec_id", "embedding", "label", "list_id")
-            .withColumn("epoch", F.lit(epoch_id))
-            .repartition(F.col("list_id"))  # one file per leaf, not per task
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list_id", "epoch")
-            .parquet(out_path)
-        )
+        # (list_id, epoch) leaves: list_id stays the FIRST partition level,
+        # so query-time pruning is unchanged
+        vectors = assigned.select("vec_id", "embedding", "label", "list_id")
+        epoch_write(vectors, out_path, epoch_id, "list_id")
 
-    import os as _os
-
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
+    src = file_stream(
+        spark, EMB_SCHEMA, sf_dir, glob="embeddings.parquet", max_files=max_files_per_trigger
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
     stored = spark.read.parquet(out_path)
     return {
         "rows": stored.count(),
@@ -473,40 +513,22 @@ def run_stream_graph_ingest(
 
     Returns {'rows', 'n_lists', 'n_edges', 'centroids' (frozen frame)}.
     """
-    import os as _os
-
     from log_vector_spark.operators.search import (
         edges_from_assigned,
         ivf_assign,
         make_centroids,
     )
 
-    emb_schema = "vec_id long, embedding array<float>, label int"
-    src = (
-        spark.readStream.schema(emb_schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    vec_path = _os.path.join(out_path, "vectors")
-    edge_path = _os.path.join(out_path, "edges")
+    vec_path = os.path.join(out_path, "vectors")
+    edge_path = os.path.join(out_path, "edges")
     state: dict = {"centroids": None}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if state["centroids"] is None:
             state["centroids"] = make_centroids(batch_df).localCheckpoint(eager=True)
         assigned = ivf_assign(batch_df, state["centroids"])
-        (
-            assigned.select("vec_id", "embedding", "label", "list_id")
-            .withColumn("epoch", F.lit(epoch_id))
-            .repartition(F.col("list_id"))  # one file per leaf, not per task
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list_id", "epoch")
-            .parquet(vec_path)
-        )
+        vectors = assigned.select("vec_id", "embedding", "label", "list_id")
+        epoch_write(vectors, vec_path, epoch_id, "list_id")
         touched = [r.list_id for r in assigned.select("list_id").distinct().collect()]
         members = (
             spark.read.parquet(vec_path)
@@ -516,26 +538,15 @@ def run_stream_graph_ingest(
         edges = edges_from_assigned(members, deg).join(
             members.select(F.col("vec_id").alias("src"), "list_id"), "src"
         )
-        (
-            edges.select("src", "dst", "escore", "list_id")
-            .repartition(F.col("list_id"))  # one file per leaf, not per task
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list_id")
-            .parquet(edge_path)
+        # per-list, not per-epoch: one file per list leaf, not per task
+        _overwrite_partitions(
+            edges.select("src", "dst", "escore", "list_id").repartition(F.col("list_id")),
+            edge_path,
+            ("list_id",),
         )
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    src = file_stream(spark, EMB_SCHEMA, src_dir, glob=glob, max_files=max_files_per_trigger)
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
     vectors = spark.read.parquet(vec_path)
     edges = spark.read.parquet(edge_path)
     return {
@@ -574,24 +585,13 @@ def run_stream_pq_ingest(
 
     Returns {'rows', 'n_lists', 'centroids', 'codebook' (frozen frames)}.
     """
-    import os as _os
-
     from log_vector_spark.operators.pq import pq_codebook, pq_encode, residual_frame
     from log_vector_spark.operators.search import make_centroids
 
-    emb_schema = "vec_id long, embedding array<float>, label int"
-    src = (
-        spark.readStream.schema(emb_schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    codes_path = _os.path.join(out_path, "codes")
+    codes_path = os.path.join(out_path, "codes")
     state: dict = {"centroids": None, "codebook": None}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if state["centroids"] is None:
             state["centroids"] = make_centroids(batch_df).localCheckpoint(eager=True)
             first_res = residual_frame(batch_df, state["centroids"]).localCheckpoint(
@@ -604,27 +604,11 @@ def run_stream_pq_ingest(
         codes = pq_encode(res, state["codebook"], vec_col="residual").join(
             res.select("vec_id", "list_id"), "vec_id"
         )
-        (
-            codes.select("vec_id", "subspace", "code_id", "list_id")
-            .withColumn("epoch", F.lit(epoch_id))
-            .repartition(F.col("list_id"))  # one file per leaf, not per task
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list_id", "epoch")
-            .parquet(codes_path)
-        )
+        codes = codes.select("vec_id", "subspace", "code_id", "list_id")
+        epoch_write(codes, codes_path, epoch_id, "list_id")
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    src = file_stream(spark, EMB_SCHEMA, src_dir, glob=glob, max_files=max_files_per_trigger)
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
     codes = spark.read.parquet(codes_path)
     return {
         "rows": codes.select("vec_id").distinct().count(),
@@ -644,7 +628,6 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark needed: the join is stateless (static side never changes
     within the run); state is only the final windowless aggregate.
     """
-    name = f"stream_enrich_{next(_COUNTER)}"
     from log_vector_spark.catalog import table
 
     batch_events = table(spark, "events", sf_dir)
@@ -662,17 +645,7 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value"
         ),
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", "stream_enrich")
 
 
 def run_stream_quality_gate(
@@ -690,24 +663,10 @@ def run_stream_quality_gate(
     Quarantined rows keep their rule flags so operators can audit WHY each
     document was held out.  Returns (n_admitted, n_quarantined).
 
-    Exactly-once, not at-least-once: the stream checkpoints under
-    ``out_path/_checkpoint`` (a re-invocation with the same out_path resumes
-    from the committed offset instead of re-ingesting the source), and each
-    epoch writes to its own ``epoch=<id>`` partition directory with
-    mode("overwrite") — a retried epoch REPLACES its own prior partial
-    output rather than appending a duplicate, so a crash between the
-    admitted and quarantine writes cannot double-count either sink.
+    The stream checkpoints under ``out_path/_checkpoint``, and each sink
+    lands ``epoch=<id>`` leaves.
     """
-    import os
-
     from log_vector_spark.operators.curation import gopher_rules
-
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         flagged = gopher_rules(batch_df)
@@ -715,27 +674,14 @@ def run_stream_quality_gate(
             ("admitted", F.col("gopher_pass")),
             ("quarantine", ~F.col("gopher_pass")),
         ):
-            flagged.filter(cond).write.mode("overwrite").parquet(
-                os.path.join(out_path, sub, f"epoch={epoch_id}")
-            )
+            epoch_write(flagged.filter(cond), os.path.join(out_path, sub), epoch_id)
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", os.path.join(out_path, "_checkpoint")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    src = file_stream(spark, DOCS_SCHEMA, sf_dir, glob="documents.parquet")
+    run_epochs(src, sink, os.path.join(out_path, "_checkpoint"))
 
     def _count(sub: str) -> int:
-        p = os.path.join(out_path, sub)
-        if not os.path.isdir(p):  # zero epochs ever committed
-            return 0
-        return spark.read.parquet(p).count()
+        df = read_artifact(spark, os.path.join(out_path, sub))
+        return 0 if df is None else df.count()
 
     return _count("admitted"), _count("quarantine")
 
@@ -765,24 +711,13 @@ def run_stream_binary_ingest(
 
     Returns {'rows', 'n_lists', 'centroids' (frozen frame)}.
     """
-    import os as _os
-
     from log_vector_spark.operators.binquant import sign_pack
     from log_vector_spark.operators.search import ivf_assign, make_centroids
 
-    emb_schema = "vec_id long, embedding array<float>, label int"
-    src = (
-        spark.readStream.schema(emb_schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    codes_path = _os.path.join(out_path, "codes")
+    codes_path = os.path.join(out_path, "codes")
     state: dict = {"centroids": None}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if state["centroids"] is None:
             state["centroids"] = make_centroids(batch_df).localCheckpoint(eager=True)
         assigned = ivf_assign(batch_df, state["centroids"])
@@ -791,26 +726,10 @@ def run_stream_binary_ingest(
             sign_pack(F.col("embedding"), 64).alias("bcode"),
             "list_id",
         )
-        (
-            codes.withColumn("epoch", F.lit(epoch_id))
-            .repartition(F.col("list_id"))  # one file per leaf, not per task
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list_id", "epoch")
-            .parquet(codes_path)
-        )
+        epoch_write(codes, codes_path, epoch_id, "list_id")
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    src = file_stream(spark, EMB_SCHEMA, src_dir, glob=glob, max_files=max_files_per_trigger)
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
     codes = spark.read.parquet(codes_path)
     return {
         "rows": codes.select("vec_id").distinct().count(),
@@ -832,11 +751,9 @@ def run_stream_bm25_ingest(
     mirroring run_stream_ivf_ingest's layout discipline for the lexical
     family.
 
-    Exactly-once: postings write dynamic-overwrite partitions keyed
-    (term_bucket, epoch) — term_bucket stays the FIRST partition level so
-    query-time pruning is unchanged, while a replayed epoch replaces
-    exactly its own leaf partitions; the stats deltas are epoch-keyed
-    1-row partitions under the same rule.  Corpus stats are MERGEABLE
+    Postings are keyed (term_bucket, epoch) — term_bucket stays the FIRST
+    partition level so query-time pruning is unchanged — and the stats
+    deltas are epoch-keyed 1-row partitions.  Corpus stats are MERGEABLE
     (n and sumlen are sums), so query time folds the bounded per-epoch
     delta rows into the global (n, sumlen) with one tiny aggregate —
     state never grows with corpus size, only with epoch count, and a
@@ -845,57 +762,26 @@ def run_stream_bm25_ingest(
     Returns {'rows': posting rows, 'n_buckets': distinct term buckets,
     'stats': folded (n, sumlen) dict}.
     """
-    import os as _os
-
     from log_vector_spark.sources.index_store import (
         corpus_stats_row,
         postings_from_docs,
     )
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(sf_dir)
-    )
+    post_dir = os.path.join(out_path, "postings")
+    stats_dir = os.path.join(out_path, "stats_deltas")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            postings_from_docs(batch_df)
-            .withColumn("epoch", F.lit(epoch_id))
-            .repartition(F.col("term_bucket"))  # one file per leaf
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("term_bucket", "epoch")
-            .parquet(_os.path.join(out_path, "postings"))
-        )
-        (
-            corpus_stats_row(batch_df)
-            .coalesce(1)  # single-row delta: 1 file/epoch, §6.2
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(_os.path.join(out_path, "stats_deltas"))
-        )
+        epoch_write(postings_from_docs(batch_df), post_dir, epoch_id, "term_bucket")
+        # single-row delta: 1 file/epoch
+        epoch_write(corpus_stats_row(batch_df), stats_dir, epoch_id, BOUNDED)
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
+    src = file_stream(
+        spark, DOCS_SCHEMA, sf_dir, glob="documents.parquet", max_files=max_files_per_trigger
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    post = spark.read.parquet(_os.path.join(out_path, "postings"))
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
+    post = spark.read.parquet(post_dir)
     folded = (
-        spark.read.parquet(_os.path.join(out_path, "stats_deltas"))
+        spark.read.parquet(stats_dir)
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("sumlen").cast("bigint").alias("sumlen"),
@@ -927,77 +813,91 @@ def run_stream_nb_ingest(
     Layout: token count deltas partition by (tok_bucket, epoch) — a 16-way
     token-hash bucket first, so a scorer that needs only its query tokens'
     rows prunes like the BM25 posting store — and label/doc-count deltas
-    by (epoch).  Exactly-once via dynamic partition overwrite, as
-    everywhere in this module.
+    by (epoch).
 
     Returns {'token_rows': folded distinct (label, token) rows,
     'labels': folded label count}.
     """
-    import os as _os
-
     from log_vector_spark.functions.text import tokens
     from log_vector_spark.sources.index_store import _term_bucket_col
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(sf_dir)
-    )
+    tok_dir = os.path.join(out_path, "token_deltas")
+    label_dir = os.path.join(out_path, "label_deltas")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         toks = batch_df.select(
             F.col("lang").alias("label"), F.explode(tokens(F.col("text"))).alias("tok")
         )
-        (
+        epoch_write(
             toks.groupBy("label", "tok")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cw_delta"))
-            .withColumn("tok_bucket", _term_bucket_col(F.col("tok")))
-            .withColumn("epoch", F.lit(epoch_id))
-            .repartition(F.col("tok_bucket"))  # one file per leaf
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tok_bucket", "epoch")
-            .parquet(_os.path.join(out_path, "token_deltas"))
+            .withColumn("tok_bucket", _term_bucket_col(F.col("tok"))),
+            tok_dir,
+            epoch_id,
+            "tok_bucket",
         )
-        (
-            batch_df.groupBy(F.col("lang").alias("label"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("nd_delta"))
-            .coalesce(1)  # bounded rows (one per label): 1 file/epoch, §6.2
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(_os.path.join(out_path, "label_deltas"))
+        # bounded rows (one per label): 1 file/epoch
+        epoch_write(
+            batch_df.groupBy(F.col("lang").alias("label")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("nd_delta")
+            ),
+            label_dir,
+            epoch_id,
+            BOUNDED,
         )
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
+    src = file_stream(
+        spark, DOCS_SCHEMA, sf_dir, glob="documents.parquet", max_files=max_files_per_trigger
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
     folded_tokens = (
-        spark.read.parquet(_os.path.join(out_path, "token_deltas"))
+        spark.read.parquet(tok_dir)
         .groupBy("label", "tok")
         .agg(F.sum("cw_delta").cast("bigint").alias("cw"))
     )
     folded_labels = (
-        spark.read.parquet(_os.path.join(out_path, "label_deltas"))
+        spark.read.parquet(label_dir)
         .groupBy("label")
         .agg(F.sum("nd_delta").cast("bigint").alias("nd"))
     )
     return {
         "token_rows": folded_tokens.count(),
         "labels": folded_labels.count(),
+    }
+
+
+def _run_sketch_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    out_path: str,
+    max_files_per_trigger: int,
+    delta_fn: Callable[[DataFrame], DataFrame],
+    sub: str,
+    keys: tuple[str, ...],
+    fold: Column,
+) -> dict:
+    """The mergeable-sketch ingest shared by the HLL, CMS and quantile
+    streams: each event batch's sketch rows (`delta_fn`) land as a BOUNDED
+    per-epoch delta under ``out_path/<sub>`` — sketch size is fixed by its
+    parameters, not by the events the epoch carried — and the read-back
+    folds them per `keys` with `fold`.
+
+    Returns {'delta_rows': rows across epoch deltas, 'folded_rows':
+    distinct `keys` after the fold, 'n_epochs': epochs}."""
+    deltas_dir = os.path.join(out_path, sub)
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        epoch_write(delta_fn(batch_df), deltas_dir, epoch_id, BOUNDED)
+
+    src = file_stream(
+        spark, EVENTS_SCHEMA, sf_dir, glob="events.parquet", max_files=max_files_per_trigger
+    )
+    run_epochs(src, sink, os.path.join(out_path + "_checkpoint", ""))
+    deltas = spark.read.parquet(deltas_dir)
+    return {
+        "delta_rows": deltas.count(),
+        "folded_rows": deltas.groupBy(*keys).agg(fold).count(),
+        "n_epochs": deltas.select("epoch").distinct().count(),
     }
 
 
@@ -1015,62 +915,23 @@ def run_stream_hll_ingest(
     (IVF lists, graph edges, PQ/binary codes, BM25 postings, NB counts —
     this is the cardinality-monitor member).
 
-    Exactly-once: deltas write dynamic-overwrite partitions keyed by
-    epoch, so a replayed epoch replaces exactly its own rows (the
-    run_stream_ivf_ingest rule).  HLL registers merge by MAX — an
-    idempotent, commutative, associative fold — so the per-epoch state is
-    bounded at m rows per event type per epoch REGARDLESS of how many
-    events the epoch carried, and a compaction job can pre-fold old
-    epochs without changing any estimate.  Batch parity (folded deltas ==
-    single-pass registers over the whole table) is pinned by
-    tests/test_stream_hll.py.
+    HLL registers merge by MAX — an idempotent, commutative, associative
+    fold — so the per-epoch state is bounded at m rows per event type per
+    epoch REGARDLESS of how many events the epoch carried, and a
+    compaction job can pre-fold old epochs without changing any estimate.
+    Batch parity (folded deltas == single-pass registers over the whole
+    table) is pinned by tests/test_stream_hll.py.
 
     Returns {'delta_rows': rows across epoch deltas, 'folded_rows':
     distinct (event_type, reg) after the max-fold, 'n_epochs': epochs}.
     """
-    import os as _os
-
     from log_vector_spark.operators.events import hll_register_rows
 
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(sf_dir)
+    return _run_sketch_ingest(
+        spark, sf_dir, out_path, max_files_per_trigger,
+        hll_register_rows,  # bounded registers (m rows per event type)
+        "register_deltas", ("event_type", "reg"), F.max("mj").alias("mj"),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            hll_register_rows(batch_df)
-            .coalesce(1)  # bounded registers (m rows): 1 file/epoch, §6.2
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(_os.path.join(out_path, "register_deltas"))
-        )
-
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    deltas = spark.read.parquet(_os.path.join(out_path, "register_deltas"))
-    folded = deltas.groupBy("event_type", "reg").agg(F.max("mj").alias("mj"))
-    return {
-        "delta_rows": deltas.count(),
-        "folded_rows": folded.count(),
-        "n_epochs": deltas.select("epoch").distinct().count(),
-    }
 
 
 def run_stream_cms_ingest(
@@ -1085,58 +946,21 @@ def run_stream_cms_ingest(
     both mergeable-sketch disciplines have a streaming write path and both
     compact through operators/maintenance.py:fold_delta_store.
 
-    Exactly-once: epoch-keyed dynamic-overwrite partitions (a replayed
-    epoch replaces exactly its own rows — addition would double-count
-    under blind append, which is why the partition-per-epoch layout is
-    load-bearing here in a way it is not for HLL's idempotent max).
-    Per-epoch state is bounded at d*w = 256 rows regardless of events
-    carried.  Batch parity pinned in tests/test_stream_hll.py.
+    The partition-per-epoch layout is load-bearing here in a way it is not
+    for HLL's idempotent max: addition would double-count a replayed epoch
+    under blind append.  Per-epoch state is bounded at d*w = 256 rows
+    regardless of events carried.  Batch parity pinned in
+    tests/test_stream_hll.py.
 
     Returns {'delta_rows', 'folded_rows', 'n_epochs'}.
     """
-    import os as _os
-
     from log_vector_spark.operators.events import cms_cell_counts
 
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(sf_dir)
+    return _run_sketch_ingest(
+        spark, sf_dir, out_path, max_files_per_trigger,
+        cms_cell_counts,  # bounded d*w cells (256 rows)
+        "cell_deltas", ("salt", "cell"), F.sum("c").alias("c"),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            cms_cell_counts(batch_df)
-            .coalesce(1)  # bounded d*w cells (256 rows): 1 file/epoch, §6.2
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(_os.path.join(out_path, "cell_deltas"))
-        )
-
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    deltas = spark.read.parquet(_os.path.join(out_path, "cell_deltas"))
-    folded = deltas.groupBy("salt", "cell").agg(F.sum("c").alias("c"))
-    return {
-        "delta_rows": deltas.count(),
-        "folded_rows": folded.count(),
-        "n_epochs": deltas.select("epoch").distinct().count(),
-    }
 
 
 def run_stream_quantile_ingest(
@@ -1152,52 +976,16 @@ def run_stream_quantile_ingest(
     not data-derived: that is the one semantic concession streaming
     requires (the batch query derives edges from the global min/max a
     stream can never know), and it is the production trade every streaming
-    histogram makes.  Exactly-once epoch partitions as in the CMS ingest
-    (sum-merge makes the layout load-bearing).
+    histogram makes.  Sum-merge makes the epoch layout load-bearing, as in
+    the CMS ingest.
     """
-    import os as _os
-
     from log_vector_spark.operators.events import fixed_bin_histogram
 
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(sf_dir)
+    return _run_sketch_ingest(
+        spark, sf_dir, out_path, max_files_per_trigger,
+        fixed_bin_histogram,  # bounded bins
+        "bin_deltas", ("event_type", "bin"), F.sum("c").alias("c"),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            fixed_bin_histogram(batch_df)
-            .coalesce(1)  # bounded bins: 1 file/epoch, §6.2
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(_os.path.join(out_path, "bin_deltas"))
-        )
-
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path + "_checkpoint", "")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    deltas = spark.read.parquet(_os.path.join(out_path, "bin_deltas"))
-    folded = deltas.groupBy("event_type", "bin").agg(F.sum("c").alias("c"))
-    return {
-        "delta_rows": deltas.count(),
-        "folded_rows": folded.count(),
-        "n_epochs": deltas.select("epoch").distinct().count(),
-    }
 
 
 # -- bounded cross-epoch dedup state (VERDICT r7 item 3) --------------------
@@ -1271,28 +1059,11 @@ def _fps_store_is_legacy(spark: SparkSession, fps_dir: str) -> bool:
     driver-side os.listdir cannot see URI stores (s3://, hdfs://), and
     assuming current-layout there would silently append mixed-depth
     epochs into an epoch-only root, the exact corruption this guard
-    exists to prevent.  An empty/missing store is current-layout by
+    exists to prevent.  An empty/missing store (`read_artifact` None —
+    e.g. an aborted first epoch's dir with no files) is current-layout by
     definition (first epoch writes the new layout)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        cols = spark.read.parquet(fps_dir).columns
-    except AnalysisException as e:
-        msg = str(e)
-        if not any(
-            t in msg
-            for t in (
-                "PATH_NOT_FOUND",
-                "Path does not exist",
-                # an aborted first epoch can leave an empty dir: no files,
-                # no schema — current-layout by the same first-write rule
-                "UNABLE_TO_INFER_SCHEMA",
-                "Unable to infer schema",
-            )
-        ):
-            raise
-        return False
-    return "epoch" in cols and FP_PFX_COL not in cols
+    df = read_artifact(spark, fps_dir)
+    return df is not None and "epoch" in df.columns and FP_PFX_COL not in df.columns
 
 
 def run_stream_training_ingest(
@@ -1330,14 +1101,16 @@ def run_stream_training_ingest(
       the first non-empty survivor batch and PERSISTED under
       out_path/centroids (unlike the in-process freeze of
       run_stream_ivf_ingest, a restarted driver reloads the same
-      centroids — list assignment stays stable across restarts).
+      centroids — list assignment stays stable across restarts).  The
+      freeze is the sqrt-stride pick; survivor ids are the sparse doc_ids
+      of gated, deduped documents, so when that pick is empty the batch's
+      lowest vec_id is frozen as the single centroid (an empty quantizer
+      would assign nothing, in every later epoch too).
 
-    Exactly-once: every artifact is an epoch-partitioned dynamic
-    overwrite, so a replayed epoch replaces exactly its own leaves; every
-    cross-epoch read (fps, Bloom deltas) is pruned to epoch < current, so
-    a replayed epoch never probes its own first write.  State on the
-    stream itself: NONE (no watermark buffers) — all cross-epoch state
-    lives in the store as data, the delta-folding discipline of
+    Every cross-epoch read (fps, Bloom deltas) is pruned to epoch <
+    current, so a replayed epoch never probes its own first write.  State
+    on the stream itself: NONE (no watermark buffers) — all cross-epoch
+    state lives in the store as data, the delta-folding discipline of
     operators/maintenance.py.
 
     Bounded dedup (VERDICT r7 item 3): the per-batch probe never scans the
@@ -1353,8 +1126,6 @@ def run_stream_training_ingest(
     Returns {'n_epochs', 'n_unique_fps', 'n_survivors', 'index_rows',
     'n_lists', 'stats': {source: (n_docs, total_tokens, avg_quality)}}.
     """
-    import os as _os
-
     from pyspark.errors import AnalysisException
 
     from log_vector_spark.operators import textops
@@ -1362,40 +1133,18 @@ def run_stream_training_ingest(
     from log_vector_spark.operators.events import hll_rho_rows
     from log_vector_spark.operators.search import ivf_assign, make_centroids
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    if where:
-        # scan-stage predicate on the stream (pushed to the file source) —
-        # the registered query samples 1-in-4 here; the full-corpus form
-        # is what the pytests drive
-        src = src.filter(where)
     embedder = DeterministicEmbedder(dim=64)
-    fps_dir = _os.path.join(out_path, "fps")
-    bloom_dir = _os.path.join(out_path, "bloom_deltas")
-    stats_dir = _os.path.join(out_path, "stats_deltas")
-    hll_dir = _os.path.join(out_path, "hll_deltas")
-    index_dir = _os.path.join(out_path, "index")
-    centroids_dir = _os.path.join(out_path, "centroids")
+    fps_dir = os.path.join(out_path, "fps")
+    bloom_dir = os.path.join(out_path, "bloom_deltas")
+    stats_dir = os.path.join(out_path, "stats_deltas")
+    hll_dir = os.path.join(out_path, "hll_deltas")
+    index_dir = os.path.join(out_path, "index")
+    centroids_dir = os.path.join(out_path, "centroids")
     # Pre-r8 stores are epoch-only; keep writing that layout (mixed depths
     # break partition discovery) and let prior_fps_pruned row-filter.
     legacy_fps = _fps_store_is_legacy(spark, fps_dir)
 
-    def _epoch_write(df: DataFrame, path: str, extra_parts: tuple[str, ...] = ()) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*extra_parts, "epoch")
-            .parquet(path)
-        )
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # ---- dedup grain: first-seen representative per fingerprint ----
         fps_b = (
             batch_df.select(
@@ -1411,7 +1160,7 @@ def run_stream_training_ingest(
             )
             .withColumn(FP_PFX_COL, F.substring("fp", 1, 1))
         )
-        if "://" not in fps_dir and not _os.path.isdir(fps_dir):
+        if _absent(fps_dir):
             firsts = fps_b  # first epoch: no prior store (no noisy probe)
         else:
             try:
@@ -1422,7 +1171,7 @@ def run_stream_training_ingest(
                 # (Bloom has no false negatives) and skips the exact probe.
                 definite_b = None
                 probable_b = fps_b
-                if "://" in bloom_dir or _os.path.isdir(bloom_dir):
+                if not _absent(bloom_dir):
                     bits = (
                         spark.read.parquet(bloom_dir)
                         .filter(F.col("epoch") < epoch_id)  # replay-proof
@@ -1470,33 +1219,20 @@ def run_stream_training_ingest(
         # lazy read it derives from
         firsts = firsts.localCheckpoint(eager=True)
         if legacy_fps:
-            _epoch_write(
-                firsts.drop(FP_PFX_COL).withColumn("epoch", F.lit(epoch_id)),
-                fps_dir,
-            )
+            epoch_write(firsts.drop(FP_PFX_COL), fps_dir, epoch_id)
         else:
-            # one file per (prefix, epoch) leaf, not per task x leaf — the
-            # keyed-sink write discipline (r11) applied to the fp store;
-            # every later epoch's pruned probe re-reads these leaves
-            _epoch_write(
-                firsts.repartition(F.col(FP_PFX_COL)).withColumn(
-                    "epoch", F.lit(epoch_id)
-                ),
-                fps_dir,
-                extra_parts=(FP_PFX_COL,),
-            )
+            # keyed by prefix: every later epoch's pruned probe re-reads
+            # these leaves
+            epoch_write(firsts, fps_dir, epoch_id, FP_PFX_COL)
         # this epoch's Bloom delta: bit positions of the NEWLY stored fps
-        # (OR-mergeable; replayed epochs replace exactly their own leaves).
-        # coalesce(1): the delta is BOUNDED (<= INGEST_BLOOM_BITS rows, a
-        # constant) and every later epoch re-reads ALL epochs' deltas —
-        # without this each epoch leaves up to `cores` sliver files whose
-        # open cost the whole rest of the stream pays (guide §6.2)
+        # (OR-mergeable).  BOUNDED (<= INGEST_BLOOM_BITS rows, a constant)
+        # and every later epoch re-reads ALL epochs' deltas — without one
+        # file per epoch each epoch leaves up to `cores` sliver files whose
+        # open cost the whole rest of the stream pays
         delta_bits = firsts.select(
             F.explode(F.array(*_fp_bloom_positions("fp"))).alias("pos")
         ).distinct()
-        _epoch_write(
-            delta_bits.coalesce(1).withColumn("epoch", F.lit(epoch_id)), bloom_dir
-        )
+        epoch_write(delta_bits, bloom_dir, epoch_id, BOUNDED)
 
         # ---- quality gate (clean_corpus_pipeline's stage expressions) ----
         gated = textops.text_quality(
@@ -1528,9 +1264,8 @@ def run_stream_training_ingest(
             F.sum(F.col("quality").cast("decimal(18,6)")).alias("sum_quality"),
         )
         # bounded sketch deltas (n_sources rows / n_sources x m registers):
-        # 1 file per epoch each, not `cores` slivers — query-time folds
-        # re-read every epoch's deltas (guide §6.2)
-        _epoch_write(stats.coalesce(1).withColumn("epoch", F.lit(epoch_id)), stats_dir)
+        # query-time folds re-read every epoch's deltas
+        epoch_write(stats, stats_dir, epoch_id, BOUNDED)
         hll = (
             hll_rho_rows(
                 survivors.select("source", F.md5("text").alias("fp")),
@@ -1540,45 +1275,42 @@ def run_stream_training_ingest(
             .groupBy("source", "reg")
             .agg(F.max("rho").alias("mj"))
         )
-        _epoch_write(hll.coalesce(1).withColumn("epoch", F.lit(epoch_id)), hll_dir)
+        epoch_write(hll, hll_dir, epoch_id, BOUNDED)
 
         # ---- encode + IVF index delta ----
         vecs = survivors.select(
             F.col("doc_id").alias("vec_id"),
             embedder.embed_col(F.col("text")).alias("embedding"),
         ).localCheckpoint(eager=True)  # embed once: centroids + assign reuse
-        if "://" not in centroids_dir and not _os.path.isdir(centroids_dir):
+        if _absent(centroids_dir):
             # freeze on the first surviving batch, persist for restarts;
             # coalesce(1): bounded quantizer metadata (~sqrt-N rows) that
-            # EVERY later epoch re-reads — one file, not one per task (§6.2)
-            make_centroids(vecs).coalesce(1).write.mode("overwrite").parquet(
-                centroids_dir
-            )
+            # EVERY later epoch re-reads — one file, not one per task (§6.2).
+            # The pick is counted on the write itself (no extra job).
+            picked = Observation()
+            frozen = make_centroids(vecs).observe(picked, F.count(F.lit(1)).alias("n"))
+            frozen.coalesce(1).write.mode("overwrite").parquet(centroids_dir)
+            if picked.get["n"] == 0:
+                lowest = vecs.orderBy("vec_id").limit(1)
+                lowest.select(
+                    F.col("vec_id").alias("list_id"), F.col("embedding").alias("centroid")
+                ).write.mode("overwrite").parquet(centroids_dir)
         centroids = spark.read.parquet(centroids_dir)
         assigned = ivf_assign(vecs, centroids)
-        # one file per (list_id, epoch) leaf, not per task x leaf — the
-        # keyed-sink discipline (r11, 5c61e59) that covered the standalone
-        # ivf/graph/pq sinks but missed this composed ingest's index delta
-        # (measured 186 sliver files for one sf0.1 epoch before; 25 after)
-        _epoch_write(
-            assigned.select("vec_id", "embedding", "list_id")
-            .repartition(F.col("list_id"))
-            .withColumn("epoch", F.lit(epoch_id)),
-            index_dir,
-            extra_parts=("list_id",),
+        # keyed by list_id (r11, 5c61e59 — measured 186 sliver files for
+        # one sf0.1 epoch before; 25 after)
+        epoch_write(
+            assigned.select("vec_id", "embedding", "list_id"), index_dir, epoch_id, "list_id"
         )
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path, "_checkpoint")
-        )
-        .foreachBatch(sink)
-        .start()
+    src = file_stream(
+        spark, DOCS_SCHEMA, src_dir, glob=glob, max_files=max_files_per_trigger,
+        # scan-stage predicate on the stream (pushed to the file source) —
+        # the registered query samples 1-in-4 here; the full-corpus form
+        # is what the pytests drive
+        where=where,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_epochs(src, sink, os.path.join(out_path, "_checkpoint"))
     return read_training_ingest(spark, out_path)
 
 
@@ -1636,43 +1368,22 @@ def run_stream_neardup_ingest(
     batch probe cost is O(true collisions + Bloom FP), independent of
     total history size.
 
-    Exactly-once: every artifact (bands, bloom deltas, survivors) is an
-    epoch-partitioned dynamic overwrite; every cross-epoch read filters
-    epoch < current, so a replayed epoch never probes its own first write.
+    Every artifact (bands, bloom deltas, survivors) is epoch-keyed and
+    every cross-epoch read filters epoch < current, so a replayed epoch
+    never probes its own first write.
 
     Returns the folded survivor relation (doc_id, source), lazily read
     from the store.
     """
-    import os as _os
-
     from pyspark.errors import AnalysisException
 
     from log_vector_spark.operators.dedup import _minhash_bands
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    if where:
-        src = src.filter(where)
-    bands_dir = _os.path.join(out_path, "bands")
-    bloom_dir = _os.path.join(out_path, "band_bloom_deltas")
-    surv_dir = _os.path.join(out_path, "survivors")
-
-    def _epoch_write(df: DataFrame, path: str, extra_parts: tuple[str, ...] = ()) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*extra_parts, "epoch")
-            .parquet(path)
-        )
+    bands_dir = os.path.join(out_path, "bands")
+    bloom_dir = os.path.join(out_path, "band_bloom_deltas")
+    surv_dir = os.path.join(out_path, "survivors")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         bands_b = _minhash_bands(
             batch_df.select("doc_id", "text"), 8, 2, 3, "doc_id", "text"
         ).withColumn(
@@ -1707,10 +1418,10 @@ def run_stream_neardup_ingest(
         # probe of the not-yet-existing store must fall through to "no
         # prior drops" on PATH_NOT_FOUND rather than crash (ADVICE r10).
         dropped_prior = None
-        if has_bands and ("://" in bands_dir or _os.path.isdir(bands_dir)):
+        if has_bands and not _absent(bands_dir):
             try:
                 probable_b = bands_b
-                if "://" in bloom_dir or _os.path.isdir(bloom_dir):
+                if not _absent(bloom_dir):
                     bits = (
                         spark.read.parquet(bloom_dir)
                         .filter(F.col("epoch") < epoch_id)  # replay-proof
@@ -1740,12 +1451,7 @@ def run_stream_neardup_ingest(
                         prior, ["band", "band_key"], "left_semi"
                     ).select("doc_id")
             except AnalysisException as e:
-                if (
-                    "PATH_NOT_FOUND" not in str(e)
-                    and "Path does not exist" not in str(e)
-                    and "UNABLE_TO_INFER_SCHEMA" not in str(e)
-                    and "Unable to infer schema" not in str(e)
-                ):
+                if not any(t in str(e) for t in _MISSING):
                     raise
                 dropped_prior = None
         dropped = (
@@ -1758,66 +1464,35 @@ def run_stream_neardup_ingest(
             dropped, "doc_id", "left_anti"
         )
         if has_bands:  # see the empty-bands guard above
-            # one file per (prefix, epoch) leaf (r11 keyed-sink discipline);
-            # bounded Bloom delta coalesced to one file — see the training
-            # ingest's identical notes (guide §6.2)
-            _epoch_write(
-                bands_b.repartition(F.col(BAND_PFX_COL)).withColumn(
-                    "epoch", F.lit(epoch_id)
-                ),
-                bands_dir,
-                extra_parts=(BAND_PFX_COL,),
-            )
+            # keyed by prefix; the bounded Bloom delta is one file per
+            # epoch — see the training ingest's identical notes
+            epoch_write(bands_b, bands_dir, epoch_id, BAND_PFX_COL)
             delta_bits = bands_b.select(
                 F.explode(F.array(*_fp_bloom_positions("bk"))).alias("pos")
             ).distinct()
-            _epoch_write(
-                delta_bits.coalesce(1).withColumn("epoch", F.lit(epoch_id)),
-                bloom_dir,
-            )
-        _epoch_write(survivors.withColumn("epoch", F.lit(epoch_id)), surv_dir)
+            epoch_write(delta_bits, bloom_dir, epoch_id, BOUNDED)
+        epoch_write(survivors, surv_dir, epoch_id)
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path, "_checkpoint")
-        )
-        .foreachBatch(sink)
-        .start()
+    src = file_stream(
+        spark, DOCS_SCHEMA, src_dir, glob=glob, max_files=max_files_per_trigger, where=where
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    if "://" not in surv_dir and not _os.path.isdir(surv_dir):
+    run_epochs(src, sink, os.path.join(out_path, "_checkpoint"))
+    stored = read_artifact(spark, surv_dir)
+    if stored is None:
         # every batch was empty (degenerate/empty corpus): no store, no rows
         return spark.createDataFrame([], "doc_id long, source string")
-    return spark.read.parquet(surv_dir).select("doc_id", "source")
+    return stored.select("doc_id", "source")
 
 
 def read_training_ingest(spark: SparkSession, out_path: str) -> dict:
     """Fold the composed ingest's delta artifacts into the query-time view
     (bounded per-epoch rows; one tiny aggregate each — the same fold
-    discipline as run_stream_bm25_ingest's stats)."""
-    import os as _os
-
-    from pyspark.errors import AnalysisException
-
-    def _read(sub: str):
-        # an artifact dir may not exist when every batch gated out
-        # (degenerate corpus) — fold to empty instead of failing inference
-        p = _os.path.join(out_path, sub)
-        if "://" not in p and not _os.path.isdir(p):
-            return None
-        try:
-            return spark.read.parquet(p)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            return None
-
-    fps = _read("fps")
-    stats = _read("stats_deltas")
-    index = _read("index")
+    discipline as run_stream_bm25_ingest's stats).  An artifact may be
+    missing when every batch gated out (degenerate corpus); it folds to
+    empty instead of failing schema inference."""
+    fps = read_artifact(spark, os.path.join(out_path, "fps"))
+    stats = read_artifact(spark, os.path.join(out_path, "stats_deltas"))
+    index = read_artifact(spark, os.path.join(out_path, "index"))
     stats_rows = (
         stats.groupBy("source")
         .agg(
@@ -1863,7 +1538,7 @@ def run_stream_psi_monitor(
     the PSI fold is driver arithmetic on collected counts — O(1) per batch
     regardless of batch size; the only distributed work is the scan-stage
     score + one 10-row hash agg.  Emits one (epoch, n_docs, psi) row per
-    non-empty batch (epoch-partitioned dynamic overwrite: replay-safe).
+    non-empty batch.
 
     The ingest gate a pipeline puts IN FRONT of run_stream_training_ingest:
     a batch whose PSI blows past ~0.25 is a distribution break (format
@@ -1871,19 +1546,11 @@ def run_stream_psi_monitor(
     """
     import json as _json
     import math as _math
-    import os as _os
 
     from log_vector_spark.operators import textops
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    base_path = _os.path.join(out_path, "baseline_hist.json")
-    psi_dir = _os.path.join(out_path, "psi")
+    base_path = os.path.join(out_path, "baseline_hist.json")
+    psi_dir = os.path.join(out_path, "psi")
 
     def _hist(batch_df: DataFrame) -> dict[int, int]:
         q = textops.text_quality(batch_df).filter(F.col("n_tokens") > 0)
@@ -1900,16 +1567,14 @@ def run_stream_psi_monitor(
         return {r["bin"]: r["n"] for r in rows}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         hist = _hist(batch_df)
         if not hist:
             return
-        if not _os.path.exists(base_path):
+        if not os.path.exists(base_path):
             tmp = base_path + ".tmp"
             with open(tmp, "w") as fh:
                 _json.dump({str(b): n for b, n in hist.items()}, fh)
-            _os.replace(tmp, base_path)
+            os.replace(tmp, base_path)
         with open(base_path) as fh:
             base = {int(b): n for b, n in _json.load(fh).items()}
         na, nb = sum(hist.values()), sum(base.values())
@@ -1918,28 +1583,12 @@ def run_stream_psi_monitor(
             pa = (hist.get(b, 0) + 0.5) / (na + 5.0)
             pe = (base.get(b, 0) + 0.5) / (nb + 5.0)
             psi += (pa - pe) * _math.log(pa / pe)
-        row = spark.createDataFrame(
-            [(int(na), round(psi, 6), int(epoch_id))],
-            "n_docs long, psi double, epoch long",
-        )
-        (
-            row.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(psi_dir)
-        )
+        row = spark.createDataFrame([(int(na), round(psi, 6))], "n_docs long, psi double")
+        epoch_write(row, psi_dir, epoch_id)
 
-    q = (
-        src.writeStream.option(
-            "checkpointLocation", _os.path.join(out_path, "_checkpoint")
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    if "://" not in psi_dir and not _os.path.isdir(psi_dir):
+    src = file_stream(spark, DOCS_SCHEMA, src_dir, glob=glob, max_files=max_files_per_trigger)
+    run_epochs(src, sink, os.path.join(out_path, "_checkpoint"))
+    stored = read_artifact(spark, psi_dir)
+    if stored is None:
         return spark.createDataFrame([], "n_docs long, psi double, epoch long")
-    return spark.read.parquet(psi_dir).select("epoch", "n_docs", "psi")
+    return stored.select("epoch", "n_docs", "psi")

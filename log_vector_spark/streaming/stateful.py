@@ -167,26 +167,10 @@ def run_sessionize_stream(
     """Drive the stateful sessionizer over the events table synchronously.
     processAllAvailable also runs the no-data batch Spark triggers when the
     watermark advances, so idle-user flushes land in the result."""
-    from log_vector_spark.streaming.pipeline import stream_events
+    from log_vector_spark.streaming.pipeline import run_to_memory, stream_events
 
-    name = f"stateful_sessions_{next(_counter)}"
-    q = (
-        sessionize_stream(stream_events(spark, sf_dir), watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-import itertools  # noqa: E402
-
-_counter = itertools.count()
+    sessions = sessionize_stream(stream_events(spark, sf_dir), watermark=watermark)
+    return run_to_memory(sessions, "append", "stateful_sessions")
 
 
 # --------------------------------------------------------------------------
@@ -327,21 +311,10 @@ def run_heavy_hitters_stream(
     """Drive the stateful heavy-hitter monitor; returns every batch's
     emitted summary (filter to max (as_of_ms, batch_seq) per type for the
     latest one — seq alone is not monotone across an eviction)."""
-    from log_vector_spark.streaming.pipeline import stream_events
+    from log_vector_spark.streaming.pipeline import run_to_memory, stream_events
 
-    name = f"stateful_hh_{next(_counter)}"
-    q = (
-        heavy_hitters_stream(stream_events(spark, sf_dir), watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    summaries = heavy_hitters_stream(stream_events(spark, sf_dir), watermark=watermark)
+    return run_to_memory(summaries, "append", "stateful_hh")
 
 
 # --- streaming CUSUM drift monitor (round 10) -------------------------------
@@ -416,18 +389,7 @@ def cusum_monitor_stream(events: DataFrame) -> DataFrame:
 
 def run_cusum_monitor_stream(spark, sf_dir: str) -> DataFrame:
     """Drive the CUSUM monitor over the events table; returns all alarms."""
-    from log_vector_spark.streaming.pipeline import stream_events
+    from log_vector_spark.streaming.pipeline import run_to_memory, stream_events
 
-    name = f"stateful_cusum_{next(_counter)}"
-    q = (
-        cusum_monitor_stream(stream_events(spark, sf_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    alarms = cusum_monitor_stream(stream_events(spark, sf_dir))
+    return run_to_memory(alarms, "append", "stateful_cusum")

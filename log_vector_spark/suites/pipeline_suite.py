@@ -1212,15 +1212,15 @@ def _ensure_snapshot_root(spark: SparkSession, sf_dir: str) -> str:
     sf_dir) into a session-lifetime temp dir (the index_store _ensure
     idiom); the returned plans stay lazy."""
     import os
-    import tempfile
 
+    from log_vector_spark.session import session_tempdir
     from log_vector_spark.sources import snapshot as snap
 
     key = os.path.abspath(sf_dir)
     root = _SNAP_CACHE.get(key)
     if root is not None and os.path.exists(os.path.join(root, "_snapshot.json")):
         return root
-    root = tempfile.mkdtemp(prefix="lvs_snapshot_demo_")
+    root = session_tempdir("lvs_snapshot_demo_")
     docs = table(spark, "documents", sf_dir).select(
         "doc_id", "source", F.md5("text").alias("fp")
     )
@@ -1934,9 +1934,9 @@ def caption_alignment_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from log_vector_spark.operators.sampling import systematic_sample
+    from log_vector_spark.session import session_tempdir
     from log_vector_spark.sources.store import (
         index_incremental as incr,
         read_chunks_incremental,
@@ -1958,11 +1958,12 @@ def index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     embedder = DeterministicEmbedder(dim=64)
-    # session-lifetime store dir, NO rmtree (VERDICT r7 item 4): the query
-    # returns the LAZY store read — collecting the whole chunk store to
-    # the driver just to outlive a finally-rmtree'd tempdir was the one
-    # O(corpus) driver materialization in the registry
-    store = tempfile.mkdtemp(prefix="incr_store_")
+    # session-lifetime store dir, removed at process exit, not in a
+    # finally (VERDICT r7 item 4): the query returns the LAZY store read —
+    # collecting the whole chunk store to the driver just to outlive a
+    # finally-rmtree'd tempdir was the one O(corpus) driver
+    # materialization in the registry
+    store = session_tempdir("incr_store_")
     incr(stale, store, embedder, chunk_size=400)   # v1: stale index
     incr(docs, store, embedder, chunk_size=400)    # v2: incremental refresh
     if not os.path.isdir(os.path.join(store, "chunks_incr")):

@@ -218,3 +218,40 @@ def test_resume_over_legacy_epoch_only_fps_store(spark, tmp_path):
     assert FP_PFX_COL not in fps.columns  # layout stayed legacy throughout
     assert fps.count() == fps.select("fp").distinct().count()  # still exact
     assert final["stats"] == _batch_parity_rows(spark)
+
+
+@pytest.mark.spark
+def test_sparse_first_survivors_still_freeze_a_centroid(spark, tmp_path):
+    """Survivor ids are the doc_ids of gated, deduped documents, so the
+    first surviving batch can hold no multiple of the sqrt stride (>= 16).
+    The freeze must still hold a centroid, or the IVF assignment of every
+    epoch is empty and the index never gets a row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from log_vector_spark.streaming.pipeline import run_stream_training_ingest
+
+    src = tmp_path / "src"
+    src.mkdir()
+    words = "the cat of a dog and the sun to a hill".split()
+    # epoch 0 ids 1..9 (none is 0 mod 16), epoch 1 ids 17..26
+    for e, ids in enumerate((list(range(1, 10)), list(range(17, 27)))):
+        texts = [" ".join(words * 4 + [f"doc{i}"]) for i in ids]
+        p = src / f"epoch{e}.parquet"
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": texts,
+                "lang": ["en"] * len(ids),
+                "source": ["s0"] * len(ids),
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }),
+            p,
+        )
+        os.utime(p, (1_700_000_000 + 100 * e,) * 2)
+    res = run_stream_training_ingest(spark, str(src), str(tmp_path / "out"))
+    assert res["n_epochs"] == 2
+    assert res["n_survivors"] == 19
+    assert res["index_rows"] == res["n_survivors"]
+    assert res["n_lists"] == 1  # the frozen lowest survivor id
+

@@ -92,17 +92,6 @@ def test_unrolled_dim_path_parity_with_hof(spark):
 
 
 @pytest.mark.spark
-def test_infer_dim_probes_width(spark):
-    from pyspark.sql import functions as F
-
-    from log_vector_spark.functions.vector import infer_dim
-
-    df = spark.range(3).select(F.array(F.lit(1.0), F.lit(2.0), F.lit(3.0)).alias("v"))
-    assert infer_dim(df, "v") == 3
-    assert infer_dim(df.filter("id < 0"), "v") is None
-
-
-@pytest.mark.spark
 def test_unrolled_wrong_dim_raises_not_nulls(spark):
     """In a non-ANSI session element_at past the end returns NULL; the size
     guard must turn a wrong dim into an error, never a silent NULL score."""
