@@ -39,7 +39,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from log_vector_spark.functions.vector import cosine_similarity, literal_vector
+from log_vector_spark.functions.vector import cosine_similarity, cosine_to_query
 
 WORD_BITS = 32
 SCORE_DP = 6
@@ -54,8 +54,8 @@ def sign_pack(vec: Column, dim: int, word_bits: int = WORD_BITS) -> Column:
 
     Bit b of word j is set iff component (j*word_bits + b + 1) > 0 — a
     pure Column expression (no UDF) that runs in the scan stage; writing
-    this next to the float column is the index build, and it is how
-    normalize_for_store-style write-time artifacts should add it.
+    this next to the float column is the index build, and it is how any
+    write-time artifact of the store should add it.
     """
     nw = n_words(dim, word_bits)
     return F.transform(
@@ -120,9 +120,7 @@ def knn_binary(
     rescored = vectors.join(F.broadcast(short), vec_id).select(
         vec_id,
         "hamming",
-        F.round(
-            cosine_similarity(F.col(vec_col), literal_vector(query_vec)), SCORE_DP
-        ).alias("score"),
+        F.round(cosine_to_query(F.col(vec_col), query_vec), SCORE_DP).alias("score"),
     )
     return rescored.orderBy(F.desc("score"), F.asc(vec_id)).limit(k)
 

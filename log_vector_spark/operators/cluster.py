@@ -91,7 +91,6 @@ def kmeans_fit(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run `iters` Lloyd rounds; return (assignments, centroids) — the
     model form.  `assignments` carries (id, e, cid, d); `centroids` is the
@@ -102,8 +101,7 @@ def kmeans_fit(
 
     Seeds = the k lowest-id vectors (deterministic, oracle-reproducible;
     swap for k-means|| sampling in production where determinism across
-    engines is not required).  Pass ``dim`` when the vector width is known
-    so the assignment distances run unrolled in codegen (bit-identical).
+    engines is not required).
     """
     import numpy as np
 
@@ -158,10 +156,9 @@ def kmeans_assignments(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """(id, cluster, dist) per vector — the assignment view of kmeans_fit."""
-    assigned, _ = kmeans_fit(vectors, k, iters, id_col, vec_col, dim)
+    assigned, _ = kmeans_fit(vectors, k, iters, id_col, vec_col)
     return assigned.select(
         id_col, F.col("cid").alias("cluster"), F.col("d").alias("dist")
     )
@@ -299,7 +296,6 @@ def cluster_silhouette(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Per-cluster simplified (centroid-based) silhouette — the standard
     clustering-quality report for a curation run that buckets a corpus

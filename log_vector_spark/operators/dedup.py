@@ -638,7 +638,6 @@ def semdedup_survivors(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = 64,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — public paper):
     cluster-scoped semantic dedup that keeps, within every duplicate
@@ -692,7 +691,7 @@ def semdedup_survivors(
         from log_vector_spark.operators.cluster import kmeans_fit
 
         assigned, centroids = kmeans_fit(
-            vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim
+            vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col
         )
         members = assigned.join(
             F.broadcast(centroids.select("cid", F.col("e").alias("ce"))), "cid"

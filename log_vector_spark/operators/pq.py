@@ -350,7 +350,7 @@ def knn_ivfpq(
     Deterministic end-to-end (stride codebook on residuals, argmin ties to
     lower code, decimal partial sums) — replayed by the knn_ivfpq oracle.
     """
-    from log_vector_spark.functions.vector import cosine_similarity, literal_vector
+    from log_vector_spark.functions.vector import cosine_to_query
     from log_vector_spark.operators.search import SCORE_DP as _DP
 
     sub = dim // m
@@ -366,7 +366,7 @@ def knn_ivfpq(
     )
     probed = (
         centroids.withColumn(
-            "qscore", F.round(cosine_similarity(F.col("centroid"), q), _DP)
+            "qscore", F.round(cosine_to_query(F.col("centroid"), query_vec), _DP)
         )
         .orderBy(F.desc("qscore"), F.asc("list_id"))
         .limit(nprobe)
@@ -432,15 +432,14 @@ def knn_ivfpq_refined(
     instead of the corpus.  The standard production layout: PQ compresses
     the scan, refine pays full precision only on the shortlist.
     """
-    from log_vector_spark.functions.vector import cosine_similarity
+    from log_vector_spark.functions.vector import cosine_to_query
 
     cand = knn_ivfpq(
         vectors, centroids, query_vec, k=k_adc, nprobe=nprobe,
         m=m, n_codes=n_codes, vec_id=vec_id, vec_col=vec_col, dim=dim,
     ).select(vec_id)
-    q = literal_vector([float(x) for x in query_vec])
     rescored = vectors.join(F.broadcast(cand), vec_id).select(
         vec_id,
-        F.round(cosine_similarity(F.col(vec_col), q), SCORE_DP).alias("score"),
+        F.round(cosine_to_query(F.col(vec_col), query_vec), SCORE_DP).alias("score"),
     )
     return rescored.orderBy(F.desc("score"), F.asc(vec_id)).limit(k)

@@ -4,7 +4,10 @@ Reference surface: ONE operator — top-k cosine k-NN over the chunk table
 (reference ask.py:188-203, k=5, distances discarded, no metadata filter).
 Spark-first re-expression (SURVEY §2.5 Q1):
 
-* exact single-query top-k: score with codegen'd HOF dot/cosine, then
+* exact single-query top-k: score each row with one interpreted HOF fold
+  (the dot product; ``functions.vector.cosine_to_query`` folds the query
+  norm on the driver, and a session cache can supply the row norm — see
+  that function for why a literal-query dot stays on the fold), then
   ``orderBy(desc).limit(k)`` — Catalyst plans TakeOrderedAndProject, a true
   distributed top-k: each partition keeps a k-heap, the driver merges k*P
   rows.  No global sort, no shuffle of the full table.  At 100 TB this scan
@@ -39,6 +42,7 @@ from pyspark.sql import functions as F
 
 from log_vector_spark.functions.vector import (
     cosine_similarity,
+    cosine_to_query,
     dot_product,
     l2_normalize,
     literal_vector,
@@ -47,10 +51,21 @@ from log_vector_spark.functions.vector import (
 SCORE_DP = 6  # rounding at the query boundary (SURVEY §7.3 float discipline)
 
 
-def score_against(df: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding") -> DataFrame:
-    """Attach a cosine `score` column against a constant query vector."""
-    q = literal_vector(query_vec)
-    return df.withColumn("score", F.round(cosine_similarity(F.col(vec_col), q), SCORE_DP))
+def score_against(
+    df: DataFrame,
+    query_vec: Sequence[float],
+    vec_col: str = "embedding",
+    norm_col: str | None = None,
+) -> DataFrame:
+    """Attach a cosine `score` column against a constant query vector.
+
+    ``norm_col`` names a column holding ``l2_norm(vec_col)`` (e.g. the one
+    ``sources.store.CachedChunks`` caches); without it the row norm is
+    folded per row.  The score is the same double either way."""
+    norm = F.col(norm_col) if norm_col else None
+    return df.withColumn(
+        "score", F.round(cosine_to_query(F.col(vec_col), query_vec, norm), SCORE_DP)
+    )
 
 
 def knn_topk(
@@ -60,16 +75,19 @@ def knn_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry: Sequence[str] = (),
+    norm_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k cosine k-NN for one query vector (reference ask.py:200-203).
 
     Returns (id, *carry, score) ordered best-first.  The plan is a single
-    parquet scan + codegen'd projection + TakeOrderedAndProject — O(k)
-    driver data.  ``carry`` names payload columns (e.g. a chunk's text)
-    that ride through the per-partition heaps, so a caller that needs them
-    for the k winners does not join back to the table.
+    scan + one score projection + TakeOrderedAndProject — O(k) driver
+    data.  ``carry`` names payload columns (e.g. a chunk's text) that ride
+    through the per-partition heaps, so a caller that needs them for the k
+    winners does not join back to the table.  ``norm_col`` is passed to
+    :func:`score_against`: with a cached row norm the only per-row fold
+    is the dot product.
     """
-    scored = score_against(vectors, query_vec, vec_col)
+    scored = score_against(vectors, query_vec, vec_col, norm_col)
     return (
         scored.select(id_col, *carry, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
@@ -102,21 +120,19 @@ def knn_matryoshka_rerank(
     """
     from log_vector_spark.functions.vector import l2_norm
 
-    q_pfx = literal_vector([float(x) for x in query_vec[:prefix_dim]])
     pfx = F.slice(F.col(vec_col), 1, prefix_dim)
     short = (
         vectors.filter(l2_norm(pfx) > 0)
-        .withColumn("s_pfx", F.round(cosine_similarity(pfx, q_pfx), SCORE_DP))
+        .withColumn(
+            "s_pfx", F.round(cosine_to_query(pfx, query_vec[:prefix_dim]), SCORE_DP)
+        )
         .orderBy(F.desc("s_pfx"), F.asc(id_col))
         .limit(shortlist)
     )
-    q_full = literal_vector([float(x) for x in query_vec])
     return (
         short.select(
             id_col,
-            F.round(cosine_similarity(F.col(vec_col), q_full), SCORE_DP).alias(
-                "score"
-            ),
+            F.round(cosine_to_query(F.col(vec_col), query_vec), SCORE_DP).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
@@ -137,7 +153,7 @@ def knn_radius(
     (duplicate sweeps, recall-safe shortlists, epsilon-neighborhoods).
 
     Scale: identical plan shape to knn_topk minus the top-k — one parquet
-    scan, codegen'd score projection, and a FILTER that admits only the
+    scan, the score projection, and a FILTER that admits only the
     radius hits, so the result (not the corpus) is what crosses to the
     caller.  The ordering sort runs on the filtered relation only.  No
     shuffle of the corpus, no driver collect.
@@ -410,16 +426,17 @@ def knn_ivf(
     """Approximate top-k: probe only the `nprobe` centroid lists nearest to
     the query, exact-score inside them.  At scale the assignment is
     precomputed and partition-pruned; here it is computed inline."""
-    q = literal_vector(query_vec)
     probed = (
-        centroids.withColumn("qscore", F.round(cosine_similarity(F.col("centroid"), q), SCORE_DP))
+        centroids.withColumn(
+            "qscore", F.round(cosine_to_query(F.col("centroid"), query_vec), SCORE_DP)
+        )
         .orderBy(F.desc("qscore"), F.asc("list_id"))
         .limit(nprobe)
         .select("list_id")
     )
     assigned = ivf_assign(vectors, centroids, vec_id, vec_col)
     candidates = assigned.join(F.broadcast(probed), "list_id")
-    scored = candidates.withColumn("score", F.round(cosine_similarity(F.col(vec_col), q), SCORE_DP))
+    scored = score_against(candidates, query_vec, vec_col)
     return scored.select(vec_id, "score").orderBy(F.desc("score"), F.asc(vec_id)).limit(k)
 
 
@@ -774,7 +791,7 @@ def knn_graph_beam(
     beam_df = (
         centroids.select(
             F.col("list_id").alias("nid"),
-            F.round(cosine_similarity(F.col("centroid"), q), SCORE_DP).alias("score"),
+            F.round(cosine_to_query(F.col("centroid"), query_vec), SCORE_DP).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("nid"))
         .limit(beam)

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_vector_spark.catalog import table
-from log_vector_spark.functions.vector import cosine_similarity, dot_product, literal_vector
+from log_vector_spark.functions.vector import cosine_to_query, dot_product, literal_vector
 from log_vector_spark.operators import search
 from log_vector_spark.operators.search import SCORE_DP
 from log_vector_spark.session import session_tempdir
@@ -175,11 +175,10 @@ def probe_list_ids(
     cents = spark.read.schema(_CENTROIDS_SCHEMA).parquet(
         centroids_path or resolve_ivf_artifact(store_root, "centroids")
     )
-    q = literal_vector(query_vec)
     rows = (
         cents.select(
             "list_id",
-            F.round(cosine_similarity(F.col("centroid"), q), SCORE_DP).alias("qscore"),
+            F.round(cosine_to_query(F.col("centroid"), query_vec), SCORE_DP).alias("qscore"),
         )
         .orderBy(F.desc("qscore"), F.asc("list_id"))
         .limit(nprobe)
@@ -210,14 +209,13 @@ def knn_ivf_stored(
     lists = probe_list_ids(
         spark, root, query_vec, nprobe, centroids_path=snap["centroids"]
     )
-    q = literal_vector(query_vec)
     vecs = spark.read.schema(_VECTORS_SCHEMA).parquet(snap["vectors"]).filter(
         F.col("list_id").isin(lists)
     )
     return (
         vecs.select(
             "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), q), SCORE_DP).alias("score"),
+            F.round(cosine_to_query(F.col("embedding"), query_vec), SCORE_DP).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
@@ -413,12 +411,11 @@ def knn_binary_stored(
         .orderBy(F.asc("hamming"), F.asc("vec_id"))
         .limit(shortlist)
     )
-    q = literal_vector(query_vec)
     emb = table(spark, "embeddings", sf_dir)
     rescored = emb.join(F.broadcast(short), "vec_id").select(
         "vec_id",
         "hamming",
-        F.round(cosine_similarity(F.col("embedding"), q), SCORE_DP).alias("score"),
+        F.round(cosine_to_query(F.col("embedding"), query_vec), SCORE_DP).alias("score"),
     )
     return rescored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 
@@ -483,12 +480,11 @@ def knn_binary_ivf_stored(
         .orderBy(F.asc("hamming"), F.asc("vec_id"))
         .limit(shortlist)
     )
-    q = literal_vector(query_vec)
     emb = table(spark, "embeddings", sf_dir)
     rescored = emb.join(F.broadcast(short), "vec_id").select(
         "vec_id",
         "hamming",
-        F.round(cosine_similarity(F.col("embedding"), q), SCORE_DP).alias("score"),
+        F.round(cosine_to_query(F.col("embedding"), query_vec), SCORE_DP).alias("score"),
     )
     return rescored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 

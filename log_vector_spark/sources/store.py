@@ -9,9 +9,10 @@ reference's actual behavior) and mode="append" (its documented intent).
 Layout decisions for 100 TB:
 * chunks are partitioned by a low-cardinality source prefix so per-source
   queries prune partitions at the parquet level;
-* embeddings are stored pre-normalized (unit vectors) with the original
-  norm kept as a column (SURVEY §4.3.1), making every later cosine a plain
-  dot product;
+* embeddings are stored as written (no write path normalizes them); the
+  row norm a cosine needs is folded once per query session instead, as a
+  column of the session cache (``CachedChunks``), so each question folds
+  only the dot product;
 * the manifest is a single-row JSON dataset next to the table (the
   reference's index_metadata.json, index.py:461-478), read back to
   auto-select the embedding backend at query time (reference ask.py:84-107
@@ -27,16 +28,10 @@ from datetime import datetime, timezone
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from log_vector_spark.functions.vector import l2_norm, l2_normalize
+from log_vector_spark.functions.vector import l2_norm
 
 CHUNKS_SCHEMA_COLS = ("chunk_id", "source", "chunk_index", "total_chunks", "document", "embedding")
-
-
-def normalize_for_store(chunks: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Store unit vectors + norm: cosine degenerates to dot at query time."""
-    return chunks.withColumn("norm", l2_norm(F.col(vec_col))).withColumn(
-        vec_col, l2_normalize(F.col(vec_col))
-    )
+NORM_COL = "embedding_norm"  # l2_norm(embedding), cached by CachedChunks
 
 
 def write_chunks(
@@ -132,6 +127,11 @@ class CachedChunks:
     storage pool: blocks that do not fit are recomputed from parquet, so a
     store larger than memory costs one scan per use and no local-disk
     copy.  Construction reads the store, so a missing store fails there.
+
+    Next to ``cols`` the relation carries ``NORM_COL``, the embedding's
+    ``l2_norm`` folded once per cache fill (8 bytes next to a 512-byte
+    vector): it depends only on the store, so a question that passes it
+    to ``knn_topk(norm_col=...)`` folds only the dot product per row.
     """
 
     def __init__(self, spark: SparkSession, path: str, cols: Sequence[str]):
@@ -148,7 +148,9 @@ class CachedChunks:
             if self._df is not None:
                 self._df.unpersist()
                 self._df = self._key = None
-            df = read_chunks(self.spark, self.path).select(*self.cols)
+            df = read_chunks(self.spark, self.path).select(
+                *self.cols, l2_norm(F.col("embedding")).alias(NORM_COL)
+            )
             self._df, self._key = df.persist(StorageLevel.MEMORY_ONLY), key
         return self._df
 

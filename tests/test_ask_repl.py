@@ -204,3 +204,46 @@ def test_overwritten_store_is_reread(spark, tmp_path):
     assert not got.startswith("Error generating answer"), got
     assert "new text" in got and "old text" not in got
     assert got == _old_plan_answer(spark, path, QUESTIONS[0])
+
+
+def _question_plan(spark, query_fn, question):
+    """The executed plan of one question's SQL execution, as the SQL status
+    store recorded it, cut to the question's own operators (the nodes above
+    the cached relation's scan)."""
+    import re
+
+    sc = spark.sparkContext
+    label = "ask-plan-shape"
+    sc.setJobDescription(label)
+    try:
+        query_fn(question)
+    finally:
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).description() == label
+    ]
+    assert len(plans) == 1, plans
+    # formatted explain: the node tree, then one "(id) Node" block per node
+    tree, _, details = plans[0].partition("\n\n\n")
+    own = set(re.findall(r"\((\d+)\)$", tree.split("InMemoryTableScan")[0], re.M))
+    assert own, tree
+    blocks = re.split(r"\n(?=\(\d+\) )", details)
+    return "\n".join(b for b in blocks if re.match(r"\((\d+)\) ", b).group(1) in own)
+
+
+@pytest.mark.spark
+def test_warm_question_folds_only_the_dot_product(spark, chunk_store):
+    """The row norm comes from the session cache and the query norm is a
+    driver-side literal, so a question's projection runs one HOF fold."""
+    from tools.ask import make_query_fn
+
+    query_fn = make_query_fn(spark, chunk_store)
+    query_fn("warm-up")
+    plan = _question_plan(spark, query_fn, "which store holds columns?")
+    assert "TakeOrderedAndProject" in plan and "zip_with(embedding" in plan
+    assert plan.count("aggregate(") == 1, plan
+    assert "SQRT(aggregate(transform(" not in plan, plan

@@ -25,7 +25,7 @@ def test_semdedup_keeps_farthest_from_centroid(spark):
     out = {
         r.vec_id: r
         for r in semdedup_survivors(
-            _df(spark, vecs), threshold=0.9, k=1, iters=2, dim=4
+            _df(spark, vecs), threshold=0.9, k=1, iters=2
         ).collect()
     }
     assert len(out) == 4  # every id gets a row (gate-column contract)
@@ -47,7 +47,7 @@ def test_semdedup_no_dups_keeps_all(spark):
         [0.0, 0.0, 0.0, 1.0],
     ]
     out = semdedup_survivors(
-        _df(spark, vecs), threshold=0.9, k=1, iters=2, dim=4
+        _df(spark, vecs), threshold=0.9, k=1, iters=2
     ).collect()
     assert all(r.keep for r in out)
 
@@ -63,7 +63,7 @@ def test_semdedup_tie_breaks_to_lower_id(spark):
     out = {
         r.vec_id: r.keep
         for r in semdedup_survivors(
-            _df(spark, vecs), threshold=0.99, k=1, iters=2, dim=4
+            _df(spark, vecs), threshold=0.99, k=1, iters=2
         ).collect()
     }
     assert out == {0: True, 1: False, 2: True}

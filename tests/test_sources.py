@@ -44,8 +44,6 @@ def test_read_corpus_text_decodes_and_isolates_errors(spark, corpus):
 
 @pytest.mark.spark
 def test_store_roundtrip_overwrite_and_append(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     from log_vector_spark.sources import store
 
     df = spark.createDataFrame(
@@ -53,16 +51,14 @@ def test_store_roundtrip_overwrite_and_append(spark, tmp_path):
         "chunk_id string, source string, chunk_index int, total_chunks int, "
         "document string, embedding array<double>",
     )
-    normed = store.normalize_for_store(df)
-    r = normed.collect()[0]
-    assert r.norm == 5.0 and r.embedding == [0.6, 0.8]
-
     path = str(tmp_path / "store")
-    store.write_chunks(normed, path, mode="overwrite")
-    store.write_chunks(normed, path, mode="append")
+    store.write_chunks(df, path, mode="overwrite")
+    store.write_chunks(df, path, mode="append")
     assert store.read_chunks(spark, path).count() == 2  # append kept both
-    store.write_chunks(normed, path, mode="overwrite")
-    assert store.read_chunks(spark, path).count() == 1  # overwrite reset
+    store.write_chunks(df, path, mode="overwrite")
+    rows = store.read_chunks(spark, path).collect()
+    assert len(rows) == 1  # overwrite reset
+    assert rows[0].embedding == [3.0, 4.0]  # stored as written, not normalized
 
     store.write_manifest(spark, path, "repo", "deterministic", "md5-lcg", 2000)
     m = store.read_manifest(spark, path)

@@ -20,7 +20,9 @@ The chunk table is read once per session into a column-pruned relation
 persisted MEMORY_ONLY (`sources.store.CachedChunks`).  Its cache key is the
 store's on-disk listing — every file's path, size and mtime_ns, read on the
 driver at each question with no Spark job — so a re-indexed or appended
-store is re-read on the next question and never served stale.
+store is re-read on the next question and never served stale.  The cache
+also holds each chunk's embedding norm, and the question's norm is folded
+on the driver, so the only per-row fold a question runs is the dot product.
 
 The loop itself is driver-side by design — SURVEY §2.5 scopes the REPL as
 a driver loop, not an operator.
@@ -51,7 +53,7 @@ def make_query_fn(spark, store_path: str, generator=None) -> Callable[[str], str
     from log_vector_spark.operators.embed import get_embedder
     from log_vector_spark.operators.rag import CONTEXT_SEP, answer, format_hits
     from log_vector_spark.operators.search import knn_topk
-    from log_vector_spark.sources.store import CachedChunks
+    from log_vector_spark.sources.store import NORM_COL, CachedChunks
 
     chunks = CachedChunks(spark, store_path, ("chunk_id", *HIT_COLS, "embedding"))  # S5
     embedder = get_embedder("deterministic")
@@ -59,7 +61,9 @@ def make_query_fn(spark, store_path: str, generator=None) -> Callable[[str], str
     def query(question: str) -> str:
         try:
             qvec = embedder.embed_batch([question])[0]
-            hits = knn_topk(chunks.get(), qvec, k=TOP_K, id_col="chunk_id", carry=HIT_COLS)
+            hits = knn_topk(
+                chunks.get(), qvec, k=TOP_K, id_col="chunk_id", carry=HIT_COLS, norm_col=NORM_COL
+            )
             rows = format_hits(hits).select("formatted").collect()
             context = CONTEXT_SEP.join(r.formatted for r in rows if r.formatted is not None)
             return answer(question, context, generator)
