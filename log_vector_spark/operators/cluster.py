@@ -340,17 +340,25 @@ def cluster_silhouette(
         id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("e")
     )
     seeds = v.orderBy(id_col).limit(k).collect()
-    cids = list(range(len(seeds)))
-    C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
-    for _ in range(iters - 1):
-        rows = sorted(
-            _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),
-            key=lambda r: r["cid"],
+    if not seeds:
+        # empty input (kmeans_fit's guard): no centroids to score against,
+        # so the report is the typed empty aggregate
+        scores = v.where(F.lit(False)).select(
+            F.lit(None).cast("long").alias("cid"), F.lit(None).cast("double").alias("s")
         )
-        cids = [r["cid"] for r in rows]
-        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+    else:
+        cids = list(range(len(seeds)))
+        C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
+        for _ in range(iters - 1):
+            rows = sorted(
+                _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),
+                key=lambda r: r["cid"],
+            )
+            cids = [r["cid"] for r in rows]
+            C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+        scores = silhouette_scores_arrow(v, cids, C, id_col)
     return (
-        silhouette_scores_arrow(v, cids, C, id_col)
+        scores
         .groupBy(F.col("cid").cast("int").alias("cluster"))
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),

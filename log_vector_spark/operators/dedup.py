@@ -898,12 +898,14 @@ def connected_components(
                 F.col("lbl").alias("old"),
                 F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
             )
-            # LAZY checkpoint (r12): both sides of the pointer-jump self-
-            # join below still read one persisted copy (single compute),
-            # but the dedicated materialization job per round is gone —
-            # the `updated` eager checkpoint's own job materializes it.
-            # Interleaved A/B at sf0.1 (3 rounds): eager 8.8 s / lazy
-            # 3.4 s for the loop portion, labels identical.
+            # lazy checkpoint (r12): both sides of the pointer-jump self-
+            # join below read one persisted copy (single compute).  It is
+            # not free of jobs: under AQE the call itself runs this frame's
+            # shuffle map stages (the neighbour aggregate and the label
+            # join); only the final stage waits for the `updated` eager
+            # checkpoint's job.  Interleaved A/B at sf0.1 (3 rounds):
+            # eager 8.8 s / lazy 3.4 s for the loop portion, labels
+            # identical.
             .localCheckpoint(eager=False)
         )
         # pointer jumping: lbl <- label(lbl).  The neighbor step alone moves

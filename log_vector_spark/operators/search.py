@@ -117,17 +117,31 @@ def knn_matryoshka_rerank(
     The recall/cost trade of the rung is measured by
     matryoshka_recall_curve; zero-norm prefixes are excluded (a prefix
     that carries no mass cannot rank).
+
+    The prefix norm is folded once per row and feeds both the exclusion
+    and the cosine.  The exclusion is a NULL score, dropped after the
+    top-``shortlist`` (nulls sort last, so the kept rows are the same): a
+    filter on the norm column would be pushed below its projection, which
+    re-folds the norm inside the filter.
     """
     from log_vector_spark.functions.vector import l2_norm
 
     pfx = F.slice(F.col(vec_col), 1, prefix_dim)
+    pfx_norm = F.col("_pfx_norm")
     short = (
-        vectors.filter(l2_norm(pfx) > 0)
+        vectors.withColumn("_pfx_norm", l2_norm(pfx))
         .withColumn(
-            "s_pfx", F.round(cosine_to_query(pfx, query_vec[:prefix_dim]), SCORE_DP)
+            "s_pfx",
+            F.when(
+                pfx_norm > 0,
+                F.round(
+                    cosine_to_query(pfx, query_vec[:prefix_dim], vec_norm=pfx_norm), SCORE_DP
+                ),
+            ),
         )
-        .orderBy(F.desc("s_pfx"), F.asc(id_col))
+        .orderBy(F.desc_nulls_last("s_pfx"), F.asc(id_col))
         .limit(shortlist)
+        .filter(F.col("s_pfx").isNotNull())
     )
     return (
         short.select(
@@ -497,6 +511,7 @@ def make_centroids_kmeans(
     vec_col: str = "embedding",
     dim: int | None = None,
     train_cap: int | None = None,
+    n: int | None = None,
 ) -> DataFrame:
     """K-means-refined IVF centroids (opt-in upgrade over the stride pick).
 
@@ -526,6 +541,9 @@ def make_centroids_kmeans(
     unsampled rounds bit-exactly; the sampled path's exactness property
     (assignment is exact GIVEN centroids) is pinned in
     tests/test_ivf_retrain.py with a tiny forced cap.
+
+    ``n`` is the row count of ``vectors`` when the caller already has it;
+    otherwise it is counted here (once per input, ``cached_count``).
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -533,12 +551,12 @@ def make_centroids_kmeans(
     from log_vector_spark.functions.argmin import assign_l2_arrow
     from log_vector_spark.operators.cluster import _update
 
-    if every is None or train_cap is not None:
+    if n is None and (every is None or train_cap is not None):
         from log_vector_spark.catalog import cached_count
 
         n = cached_count(vectors)
-        if every is None:
-            every = sqrt_stride(n)
+    if every is None:
+        every = sqrt_stride(n)
     spark = vectors.sparkSession
     v = vectors.select(
         F.col(vec_id), F.transform(vec_col, lambda x: x.cast("double")).alias("e")

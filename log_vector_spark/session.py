@@ -12,6 +12,17 @@ chosen so the same plans run unchanged on a 1000-executor cluster against
   Arrow-batched, never row-at-a-time.
 * Session timezone pinned to UTC so timestamps compare bit-for-bit with the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
+* Generated classes are cached for the whole session (``CODEGEN_CACHE_ENTRIES``),
+  so a repeated plan compiles once, not once per run.
+
+Writers take their counters from the write itself (``DataFrame.observe``
+with a ``pyspark.sql.Observation``), not from a second scan of the input or
+of the written output.  An ``observe`` must sit ABOVE any
+``localCheckpoint`` in the plan it counts: the checkpointed node runs in its
+own jobs, outside the action that completes the Observation, so an observe
+below it never reports.  Under AQE even ``localCheckpoint(eager=False)``
+runs every shuffle map stage of its input when it is called; only the
+final stage waits for the first action.
 """
 
 from __future__ import annotations
@@ -20,10 +31,20 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Entries of Spark's generated-class cache (default 100).  One `write`
+# round of the engine (full and incremental index, training ingest, dedup,
+# IVF store lifecycle) uses about 530 distinct generated classes, so at the
+# default every warm round compiled them all again: 536 and 538 Janino
+# compiles in two warm rounds, against 12 and 0 at this size
+# (perfbench/run.py --workload write, seed 7, local[2] on a 4-vCPU box,
+# Spark 4.1.2).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(app_name: str = "log_vector_spark", cpus: str | int | None = None) -> SparkSession:
@@ -54,6 +75,7 @@ def get_spark(app_name: str = "log_vector_spark", cpus: str | int | None = None)
             "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -67,3 +89,17 @@ def session_tempdir(prefix: str) -> str:
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+def observed(obs: Observation, fallback: Callable[[], dict]) -> dict:
+    """The metrics an action collected through ``obs``, or ``fallback()``
+    when the action's plan lost the observe.
+
+    AQE replaces a query stage that produced no rows with an empty
+    relation, and the observes inside that stage go with it; Spark then
+    completes the Observation with an empty row.  So ``fallback`` is what
+    the metrics read over zero rows when the observe's rows all reach the
+    stage output, and a recount when a filter drops rows in between."""
+    if obs._jo is not None and obs._jo.getRow().length() == 0:
+        return fallback()
+    return obs.get

@@ -39,14 +39,14 @@ import decimal as _decimal
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from log_vector_spark.catalog import table
 from log_vector_spark.functions.vector import cosine_to_query, dot_product, literal_vector
 from log_vector_spark.operators import search
 from log_vector_spark.operators.search import SCORE_DP
-from log_vector_spark.session import session_tempdir
+from log_vector_spark.session import observed, session_tempdir
 
 _CACHE: dict[tuple[str, str], str] = {}
 
@@ -853,7 +853,7 @@ def _retrain_ivf_store_locked(
     # Lloyd kernel) — the old eager checkpoint that kept the Lloyd rounds
     # off the recompute chain has nothing left to pin
     cents = search.make_centroids_kmeans(
-        base, iters=iters, train_cap=train_cap
+        base, iters=iters, train_cap=train_cap, n=n
     ).select(
         "list_id",
         F.transform("centroid", lambda x: x.cast("float")).alias("centroid"),
@@ -876,13 +876,22 @@ def _retrain_ivf_store_locked(
     cents.repartition(1).write.mode("overwrite").parquet(
         os.path.join(store_root, f"centroids_v{version}")
     )
+    # return-dict stats ride on the sizes write (one row per list, derived
+    # from the written vectors, so they certify the same content): no
+    # read-back of the fresh store or of its sizes table
+    sizes_obs = Observation()
     _list_sizes(
         spark.read.schema(_VECTORS_SCHEMA).parquet(
             os.path.join(store_root, f"vectors_v{version}")
         )
+    ).observe(
+        sizes_obs,
+        F.coalesce(F.sum("n"), F.lit(0)).alias("nv"),
+        F.count(F.lit(1)).alias("nl"),
     ).repartition(1).write.mode("overwrite").parquet(
         os.path.join(store_root, f"sizes_v{version}")
     )
+    stats = observed(sizes_obs, lambda: {"nv": 0, "nl": 0})
     tmp = mp + ".tmp"
     with open(tmp, "w") as fh:
         _json.dump({"version": version}, fh)
@@ -896,24 +905,11 @@ def _retrain_ivf_store_locked(
         if ("_v" in d and d.split("_v")[0] in ("vectors", "centroids", "sizes")
                 and d not in live):
             _shutil.rmtree(os.path.join(store_root, d))
-    # return-dict stats from the NEW version's sizes table (bounded, one
-    # row per list, derived from the written store above so it certifies
-    # the same content) — one tiny agg instead of two more full scans of
-    # the fresh store (r12; the old form cost 2 corpus scans per retrain)
-    meta_row = (
-        spark.read.schema(_SIZES_SCHEMA)
-        .parquet(os.path.join(store_root, f"sizes_v{version}"))
-        .agg(
-            F.coalesce(F.sum("n"), F.lit(0)).alias("nv"),
-            F.count(F.lit(1)).alias("nl"),
-        )
-        .first()
-    )
     return {
         "version": version,
-        "n_vectors": meta_row["nv"],
+        "n_vectors": stats["nv"],
         "n_lists_before": n_lists_before,
-        "n_lists_after": meta_row["nl"],
+        "n_lists_after": stats["nl"],
     }
 
 

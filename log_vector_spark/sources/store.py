@@ -26,9 +26,10 @@ from collections.abc import Sequence
 from datetime import datetime, timezone
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from log_vector_spark.functions.vector import l2_norm
+from log_vector_spark.session import observed
 
 CHUNKS_SCHEMA_COLS = ("chunk_id", "source", "chunk_index", "total_chunks", "document", "embedding")
 NORM_COL = "embedding_norm"  # l2_norm(embedding), cached by CachedChunks
@@ -468,11 +469,15 @@ def index_incremental(
                 raise
             stored_fps = None
 
+    # touched partitions, deleted and stale counts in ONE action.  A
+    # struct keeps a NULL source, which collect_set alone would drop.
+    # Bounded collect by design — the store is partitioned by a
+    # low-cardinality source prefix (module docstring).
+    src_set = F.collect_set(F.struct(source_col))
     if stored_fps is None:
         stale_docs = docs
-        deleted = None
-        touched = [r[0] for r in docs.select(source_col).distinct().collect()]
-        n_deleted = 0
+        diff = docs.agg(src_set.alias("touched"), F.lit(0).alias("n_deleted"),
+                        F.count(F.lit(1)).alias("n_stale"))
     else:
         # diff key is the FULL (id, source, fp) triple: a doc whose source
         # moved but whose text is unchanged is stale too (ADVICE r7 —
@@ -486,23 +491,26 @@ def index_incremental(
         # touched partitions: sources holding a stale or deleted document,
         # PLUS the stored (old) sources of stale ids — a (doc_id, source)
         # move must rewrite the old partition or its chunks survive
-        # alongside the re-indexed ones.  Bounded collect by design — the
-        # store is partitioned by a low-cardinality source prefix (module
-        # docstring).
+        # alongside the re-indexed ones
         stale_old_src = stored_fps.join(
             stale_ids.select(id_col), id_col, "left_semi"
         ).select(source_col)
-        touched_df = (
+        stale_docs = docs.join(stale_ids.select(id_col), id_col, "left_semi")
+        diff = (
             stale_ids.select(source_col)
             .union(deleted.select(source_col))
             .union(stale_old_src)
-            .distinct()
+            .agg(src_set.alias("touched"))
+            .crossJoin(deleted.agg(F.count(F.lit(1)).alias("n_deleted")))
+            .crossJoin(stale_docs.agg(F.count(F.lit(1)).alias("n_stale")))
         )
-        touched = [r[0] for r in touched_df.collect()]
-        n_deleted = deleted.count()
-        stale_docs = docs.join(stale_ids.select(id_col), id_col, "left_semi")
+    diff = diff.first()
+    touched = [r[0] for r in diff["touched"]]
+    n_deleted, n_stale = diff["n_deleted"], diff["n_stale"]
 
     if not touched:
+        # nothing stale or deleted — or an empty first corpus, where an
+        # all-empty partitioned write would leave an unreadable parquet dir
         return {
             "n_stale_docs": 0,
             "n_deleted_docs": 0,
@@ -522,8 +530,11 @@ def index_incremental(
     )
     # spread the embed UDF across cores: the chunk explode inherits the
     # docs scan partitioning (a single-file table reads as 1 partition),
-    # which would otherwise run the pipeline's expensive map on one core
+    # which would otherwise run the pipeline's expensive map on one core.
+    # The store write below is this frame's only action, and its counters
+    # come from observes on it, so nothing re-runs the embed UDF.
     nparts = spark.sparkContext.defaultParallelism
+    fresh_obs = Observation()
     fresh = (
         chunked.withColumn(
             # chunk_id = source:doc_id:chunk_index; second-to-last token so
@@ -538,25 +549,12 @@ def index_incremental(
             "chunk_id", "source", "chunk_index", "total_chunks", "document",
             "embedding", id_col, INCR_FP_COL,
         )
-        # lazy checkpoint: the store write below materializes this once;
-        # the post-write written-partitions probe then reuses it instead
-        # of re-running the embed UDF (the bitext lazy-checkpoint
-        # discipline)
-        .localCheckpoint(eager=False)
+        .observe(fresh_obs, F.count(F.lit(1)).alias("n"), src_set.alias("written"))
     )
-    n_stale = stale_docs.count()
+    def nothing():
+        return {"n": 0, "written": []}
 
     if stored_fps is None:
-        if n_stale == 0:
-            # empty first corpus: nothing to write — an all-empty
-            # partitioned write would leave an unreadable parquet dir
-            return {
-                "n_stale_docs": 0,
-                "n_deleted_docs": 0,
-                "n_fresh_chunks": 0,
-                "n_carried_chunks": 0,
-                "touched_sources": [],
-            }
         # one shuffle by the partition column before the write: without it
         # every task writes a sliver into every source dir (32 files per
         # partition from the embed-spread repartition above) — footer count
@@ -567,11 +565,10 @@ def index_incremental(
             .partitionBy(source_col)
             .parquet(target)
         )
-        n_fresh = spark.read.parquet(target).count()
         return {
             "n_stale_docs": n_stale,
             "n_deleted_docs": 0,
-            "n_fresh_chunks": n_fresh,
+            "n_fresh_chunks": observed(fresh_obs, nothing)["n"],
             "n_carried_chunks": 0,
             "touched_sources": sorted(touched),
         }
@@ -580,15 +577,17 @@ def index_incremental(
     # pruned scan), materialized to break the same-path read/overwrite
     # cycle before the dynamic overwrite below replaces those partitions.
     # Survival key is the full (id, source, fp) triple — a moved doc's old
-    # row matches on (id, fp) but not source and must NOT be carried.
+    # row matches on (id, fp) but not source and must NOT be carried.  Its
+    # observe sits above the checkpoint, in the write's plan (session.py).
     current_keys = fps.select(id_col, source_col, INCR_FP_COL)
+    carry_obs = Observation()
     carry = (
         spark.read.parquet(target)
         .filter(F.col(source_col).isin(touched))
         .join(current_keys, [id_col, source_col, INCR_FP_COL], "left_semi")
         .localCheckpoint(eager=True)
+        .observe(carry_obs, F.count(F.lit(1)).alias("n"), src_set.alias("written"))
     )
-    n_carried = carry.count()
     out = carry.select(*fresh.columns).unionByName(fresh)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -601,37 +600,24 @@ def index_incremental(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    carried = observed(carry_obs, nothing)
+    written_fresh = observed(fresh_obs, nothing)
     # dynamic overwrite only replaces partitions PRESENT in the written
     # data — a touched partition whose every doc was deleted (nothing
     # carried, nothing fresh) would silently keep its stale rows.  Remove
     # those partition dirs explicitly (touched is a bounded list).
     import shutil as _shutil
 
-    written = {
-        r[0] for r in out.select(source_col).distinct().collect()
-    }
+    written = {r[0] for r in carried["written"] + written_fresh["written"]}
     for src_val in set(touched) - written:
         pdir = os.path.join(target, f"{source_col}={src_val}")
         if os.path.isdir(pdir):
             _shutil.rmtree(pdir)
-    if not written and not any(
-        d.startswith(f"{source_col}=") for d in os.listdir(target)
-    ):
-        # every partition deleted: the store is now empty (unreadable as
-        # parquet) — count from what we know instead of a failing read
-        n_fresh = 0
-    else:
-        n_fresh = (
-            spark.read.parquet(target)
-            .filter(F.col(source_col).isin(touched))
-            .count()
-            - n_carried
-        )
     return {
         "n_stale_docs": n_stale,
         "n_deleted_docs": n_deleted,
-        "n_fresh_chunks": n_fresh,
-        "n_carried_chunks": n_carried,
+        "n_fresh_chunks": written_fresh["n"],
+        "n_carried_chunks": carried["n"],
         "touched_sources": sorted(touched),
     }
 

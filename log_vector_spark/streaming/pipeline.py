@@ -1485,11 +1485,16 @@ def run_stream_neardup_ingest(
 
 
 def read_training_ingest(spark: SparkSession, out_path: str) -> dict:
-    """Fold the composed ingest's delta artifacts into the query-time view
-    (bounded per-epoch rows; one tiny aggregate each — the same fold
-    discipline as run_stream_bm25_ingest's stats).  An artifact may be
-    missing when every batch gated out (degenerate corpus); it folds to
-    empty instead of failing schema inference."""
+    """Fold the composed ingest's delta artifacts into the query-time view:
+    one bounded aggregate per artifact (per-source rows for the stats,
+    one row each for fps and index — the same fold discipline as
+    run_stream_bm25_ingest's stats).  It reads the store rather than
+    counting inside the stream, so an ingest resumed from a checkpoint
+    still reports every epoch.  An artifact may be missing when every
+    batch gated out (degenerate corpus); it folds to empty instead of
+    failing schema inference.  ``epoch`` and ``list_id`` are never NULL
+    (a per-epoch literal and an argmin over the frozen centroids), so
+    their distinct counts need no NULL bucket."""
     fps = read_artifact(spark, os.path.join(out_path, "fps"))
     stats = read_artifact(spark, os.path.join(out_path, "stats_deltas"))
     index = read_artifact(spark, os.path.join(out_path, "index"))
@@ -1506,12 +1511,22 @@ def read_training_ingest(spark: SparkSession, out_path: str) -> dict:
         if stats is not None
         else []
     )
+    n_epochs, n_fps = (
+        fps.agg(F.count_distinct("epoch"), F.count(F.lit(1))).first()
+        if fps is not None
+        else (0, 0)
+    )
+    index_rows, n_lists = (
+        index.agg(F.count(F.lit(1)), F.count_distinct("list_id")).first()
+        if index is not None
+        else (0, 0)
+    )
     return {
-        "n_epochs": fps.select("epoch").distinct().count() if fps is not None else 0,
-        "n_unique_fps": fps.count() if fps is not None else 0,
+        "n_epochs": n_epochs,
+        "n_unique_fps": n_fps,
         "n_survivors": int(sum(r["n_docs"] for r in stats_rows)),
-        "index_rows": index.count() if index is not None else 0,
-        "n_lists": index.select("list_id").distinct().count() if index is not None else 0,
+        "index_rows": index_rows,
+        "n_lists": n_lists,
         "stats": {
             r["source"]: (r["n_docs"], r["total_tokens"], r["avg_quality"])
             for r in stats_rows

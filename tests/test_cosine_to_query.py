@@ -151,3 +151,41 @@ def test_knn_topk_k_beyond_rows_matches_old_expression(vectors, n_rows):
         assert [(r.vec_id, _bits(r.score)) for r in got] == [
             (r.vec_id, _bits(r.score)) for r in old
         ]
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("shortlist", [3, len(ROWS) + 3])
+@pytest.mark.parametrize("q", QUERIES[:2])
+def test_matryoshka_rerank_matches_old_two_stage(spark, tmp_path, q, shortlist):
+    """knn_matryoshka_rerank folds the prefix norm once per row (excluding
+    zero-norm prefixes by a NULL score instead of a filter); the shortlist
+    and the scores stay those of the old filter + three-fold form."""
+    from pyspark.sql import functions as F
+
+    from log_vector_spark.functions.vector import l2_norm
+    from log_vector_spark.operators.search import knn_matryoshka_rerank
+
+    # a parquet scan, so the optimizer cannot fold the plan into a local
+    # relation and the executed plan shows the per-row folds
+    path = str(tmp_path / "vectors")
+    spark.createDataFrame(ROWS, SCHEMA).write.parquet(path)
+    vectors = spark.read.parquet(path)
+    e, k = F.col("embedding"), len(ROWS) + 3
+    pfx = F.slice(e, 1, 2)
+    old = (
+        vectors.filter(l2_norm(pfx) > 0)
+        .withColumn("s_pfx", F.round(_old_cosine(pfx, q[:2]), 6))
+        .orderBy(F.desc("s_pfx"), F.asc("vec_id"))
+        .limit(shortlist)
+        .select("vec_id", F.round(_old_cosine(e, q), 6).alias("score"))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
+        .limit(k)
+        .collect()
+    )
+    new = knn_matryoshka_rerank(vectors, q, k=k, prefix_dim=2, shortlist=shortlist)
+    assert [(r.vec_id, _bits(r.score)) for r in new.collect()] == [
+        (r.vec_id, _bits(r.score)) for r in old
+    ]
+    # one prefix-norm fold per row: l2_norm(slice(...)) appears once
+    plan = new._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(transform(slice(") == 1, plan

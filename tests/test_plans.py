@@ -528,9 +528,6 @@ def test_no_unreviewed_collect_sites_in_engine_source():
         ("operators/search.py", "seeds = v.filter(F.col(vec_id) % every == 0).collect()"),
         ("operators/search.py", "_update(assign_l2_arrow(train, cids, C, vec_id, cid_type)).collect(),"),
         ("sources/store.py", "rows = spark.read.json(os.path.join(path, \"manifest\")).collect()"),
-        ("sources/store.py", "touched = [r[0] for r in docs.select(source_col).distinct().collect()]"),
-        ("sources/store.py", "touched = [r[0] for r in touched_df.collect()]"),
-        ("sources/store.py", "r[0] for r in out.select(source_col).distinct().collect()"),
     }
     found = set()
     for root, _dirs, files in os.walk(pkg):

@@ -48,14 +48,20 @@ def build_index(
     Kept separate from main() so tests (and notebooks) can drive the exact
     CLI pipeline in-process.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from log_vector_spark.operators.chunk import chunk_documents
     from log_vector_spark.operators.embed import get_embedder
+    from log_vector_spark.session import observed
     from log_vector_spark.sources.corpus import read_corpus_text
     from log_vector_spark.sources.store import upsert_chunks, write_chunks, write_manifest
 
-    corpus = read_corpus_text(spark, repo_dir)
+    # both counters ride on the write (session.py: observe, not re-scan),
+    # so the corpus is scanned, chunked and embedded once
+    scanned = Observation()
+    corpus = read_corpus_text(spark, repo_dir).observe(
+        scanned, F.count_if(F.col("error")).alias("files_errored")
+    )
     ok = corpus.filter(~F.col("error")).select(
         F.col("path").alias("doc_id"), F.col("source"), F.col("text")
     )
@@ -71,8 +77,11 @@ def build_index(
     if append:
         n_written = upsert_chunks(embedded, store_path)
     else:
-        write_chunks(embedded, store_path, mode="overwrite")
-        n_written = embedded.count()
+        written = Observation()
+        write_chunks(
+            embedded.observe(written, F.count(F.lit(1)).alias("n")), store_path, mode="overwrite"
+        )
+        n_written = observed(written, lambda: {"n": 0})["n"]
     write_manifest(
         spark,
         store_path,
@@ -81,7 +90,11 @@ def build_index(
         embedding_model=model or embedder_kind,
         chunk_size=chunk_size,
     )
-    n_err = corpus.filter(F.col("error")).count()
+    # the errored files are filtered out inside the scan stage, so a corpus
+    # with no text at all loses the observe (session.observed): recount
+    n_err = observed(
+        scanned, lambda: {"files_errored": corpus.filter(F.col("error")).count()}
+    )["files_errored"]
     return {"chunks_written": n_written, "files_errored": n_err}
 
 
