@@ -183,6 +183,40 @@ def _pa_type(dt: T.DataType):
     raise TypeError(f"argmin kernel: unsupported centroid id type {dt}")
 
 
+def centroid_frame(
+    spark,
+    cids,
+    C,
+    cid_type: T.DataType,
+    elem_type: T.DataType = T.DoubleType(),
+    names: tuple[str, str] = ("list_id", "centroid"),
+) -> DataFrame:
+    """A k-row centroid table the driver already holds, as an Arrow local
+    relation: it plans as ``LocalTableScan``, so reading it runs no job (a
+    list literal plans as ``Scan ExistingRDD`` and runs a Python-RDD job on
+    every action).  ``cid_type`` is kept; with ``elem_type`` FloatType each
+    double is rounded to float32, exactly what ``cast("float")`` gives.  A
+    NULL centroid stays NULL."""
+    import pyarrow as pa
+
+    np_elem, pa_elem = (
+        (np.float32, pa.float32()) if isinstance(elem_type, T.FloatType) else (np.float64, pa.float64())
+    )
+    cid_col, vec_col = names
+    table = pa.table(
+        [
+            pa.array([int(c) for c in cids], _pa_type(cid_type)),
+            pa.array(
+                [None if e is None else np.asarray(e, np_elem) for e in C], pa.list_(pa_elem)
+            ),
+        ],
+        schema=pa.schema(
+            [pa.field(cid_col, _pa_type(cid_type), nullable=False), pa.field(vec_col, pa.list_(pa_elem))]
+        ),
+    )
+    return spark.createDataFrame(table)
+
+
 def assign_l2_arrow(
     v: DataFrame,
     cid_vals,

@@ -12,14 +12,15 @@ surface).  The implementation (r12, guide §4.2/§2.4):
     Exchange, no interpreted per-pair fold (the old
     crossJoin(broadcast) + fold + min(struct) plan is kept in ``_assign``
     as the executable spec the kernel is pinned against);
-  * each Lloyd round's k-row centroid table is collected back, so the
-    next round's kernel (and every downstream consumer) sees a literal —
-    the expensive multi-round lineage is paid once per query build, not
-    once per consumer action;
+  * each Lloyd round's centroids are collected back, so the next
+    round's kernel (and every downstream consumer) sees a literal — the
+    expensive multi-round lineage is paid once per query build, not once
+    per consumer action;
   * the centroid update stays a distributed linear shuffle keyed
     (cluster, dim) with map-side partial aggregation producing k*dim
-    rows (decimal-exact means are cheap JVM codegen; nothing data-scaled
-    ever reaches the driver — only k x dim doubles per round).
+    rows, collected as they are and put in dim order on the driver
+    (decimal-exact means are cheap JVM codegen; nothing data-scaled ever
+    reaches the driver — only k x dim doubles per round).
 
 Determinism contract (what makes this oracle-pairable against unrolled
 SQL): seeds are the k lowest-id vectors; distances are rounded to 6dp
@@ -30,6 +31,7 @@ identical rounded state through every iteration.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -68,21 +70,29 @@ def _assign(
     )
 
 
-def _update(assigned: DataFrame) -> DataFrame:
-    """Per-cluster element-wise mean, decimal-exact then rounded to 6dp."""
+def _update(assigned: DataFrame) -> tuple[list, np.ndarray]:
+    """One Lloyd update, collected: per-cluster element-wise means,
+    decimal-exact then rounded to 6dp, as (cids ascending, k x dim array).
+
+    The (cid, dim) means come back as k x dim rows, the payload the k
+    centroid arrays carry, and are put in dim order here: one shuffle per
+    round, where grouping them into arrays in Spark first costs one more
+    job for the same rows."""
     dims = assigned.select("cid", F.posexplode("e").alias("dim", "x"))
-    per = dims.groupBy("cid", "dim").agg(
+    means = dims.groupBy("cid", "dim").agg(
         F.round(
             F.sum(F.col("x").cast("decimal(28,20)")).cast("double") / F.count(F.lit(1)),
             6,
         ).alias("xm")
     )
-    return per.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "xm"))),
-            lambda s: s.getField("xm"),
-        ).alias("e")
+    per: dict = {}
+    for cid, dim, xm in means.collect():  # k x dim rows
+        per.setdefault(cid, []).append((dim, xm))
+    cids = sorted(per)
+    C = np.asarray(
+        [[xm for _, xm in sorted(per[c], key=lambda t: t[0])] for c in cids], dtype=np.float64
     )
+    return cids, C
 
 
 def kmeans_fit(
@@ -103,19 +113,11 @@ def kmeans_fit(
     swap for k-means|| sampling in production where determinism across
     engines is not required).
     """
-    import numpy as np
-
-    from log_vector_spark.functions.argmin import assign_l2_arrow
+    from log_vector_spark.functions.argmin import assign_l2_arrow, centroid_frame
 
     spark = vectors.sparkSession
     v = vectors.select(
         id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("e")
-    )
-    c_schema = T.StructType(
-        [
-            T.StructField("cid", T.IntegerType(), False),
-            T.StructField("e", T.ArrayType(T.DoubleType()), True),
-        ]
     )
     # seeds: the k lowest-id vectors, collected (k rows) — cid = rank 0..k-1
     seeds = v.orderBy(id_col).limit(k).collect()
@@ -125,28 +127,20 @@ def kmeans_fit(
             .withColumn("cid", F.lit(None).cast("int"))
             .withColumn("d", F.lit(None).cast("double"))
         )
-        return empty_assigned, spark.createDataFrame([], c_schema)
+        return empty_assigned, centroid_frame(spark, [], [], T.IntegerType(), names=("cid", "e"))
     cids = list(range(len(seeds)))
     C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
     # r12 (guide §4.2/§2.4): each round = one map-side Arrow argmin over v
-    # + the distributed decimal-exact update, whose k-row result is
-    # collected for the next round.  The k x dim collect per round is the
-    # same payload the old plan's BroadcastExchange carried; paying the
-    # rounds eagerly here (instead of the old fused lazy lineage) means a
+    # + the distributed decimal-exact update, whose k x dim result is
+    # collected for the next round (the same payload the old plan's
+    # BroadcastExchange carried).  Paying the rounds eagerly here means a
     # consumer action re-runs only ONE cheap kernel pass, never the whole
-    # Lloyd chain.  (The r6 per-round localCheckpoint revert stands — this
-    # replaces checkpoints with literals, which nothing can re-fire.)
+    # Lloyd chain, and the returned centroids are an Arrow local relation
+    # that nothing can re-fire.
     for _ in range(iters - 1):
-        rows = sorted(
-            _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),
-            key=lambda r: r["cid"],
-        )
-        cids = [r["cid"] for r in rows]
-        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+        cids, C = _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType()))
     assigned = assign_l2_arrow(v, cids, C, id_col, T.IntegerType())
-    c = spark.createDataFrame(
-        [(int(cid), [float(x) for x in e]) for cid, e in zip(cids, C)], c_schema
-    )
+    c = centroid_frame(spark, cids, C, T.IntegerType(), names=("cid", "e"))
     return assigned, c
 
 
@@ -329,8 +323,6 @@ def cluster_silhouette(
     # the only shuffle in the plan.  Lloyd rounds share kmeans_fit's
     # collect-per-round idiom (identical rounded state, literal
     # centroids).
-    import numpy as np
-
     from log_vector_spark.functions.argmin import (
         assign_l2_arrow,
         silhouette_scores_arrow,
@@ -350,12 +342,7 @@ def cluster_silhouette(
         cids = list(range(len(seeds)))
         C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
         for _ in range(iters - 1):
-            rows = sorted(
-                _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),
-                key=lambda r: r["cid"],
-            )
-            cids = [r["cid"] for r in rows]
-            C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+            cids, C = _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType()))
         scores = silhouette_scores_arrow(v, cids, C, id_col)
     return (
         scores

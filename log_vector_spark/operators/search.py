@@ -546,9 +546,8 @@ def make_centroids_kmeans(
     otherwise it is counted here (once per input, ``cached_count``).
     """
     import numpy as np
-    from pyspark.sql import types as T
 
-    from log_vector_spark.functions.argmin import assign_l2_arrow
+    from log_vector_spark.functions.argmin import assign_l2_arrow, centroid_frame
     from log_vector_spark.operators.cluster import _update
 
     if n is None and (every is None or train_cap is not None):
@@ -563,14 +562,8 @@ def make_centroids_kmeans(
     )
     cid_type = v.schema[vec_id].dataType
     seeds = v.filter(F.col(vec_id) % every == 0).collect()
-    out_schema = T.StructType(
-        [
-            T.StructField("list_id", cid_type, False),
-            T.StructField("centroid", T.ArrayType(T.DoubleType()), True),
-        ]
-    )
     if not seeds:
-        return spark.createDataFrame([], out_schema)
+        return centroid_frame(spark, [], [], cid_type)
     cids = [r[0] for r in seeds]
     C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
     train = v
@@ -584,15 +577,8 @@ def make_centroids_kmeans(
     # localCheckpoint chain outright: nothing downstream can re-fire the
     # rounds, and the returned quantizer is a LocalTableScan.
     for _ in range(iters):
-        rows = sorted(
-            _update(assign_l2_arrow(train, cids, C, vec_id, cid_type)).collect(),
-            key=lambda r: r["cid"],
-        )
-        cids = [r["cid"] for r in rows]
-        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
-    return spark.createDataFrame(
-        [(cid, [float(x) for x in e]) for cid, e in zip(cids, C)], out_schema
-    )
+        cids, C = _update(assign_l2_arrow(train, cids, C, vec_id, cid_type))
+    return centroid_frame(spark, cids, C, cid_type)
 
 
 def normalize_vectors(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:

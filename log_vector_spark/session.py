@@ -15,6 +15,22 @@ chosen so the same plans run unchanged on a 1000-executor cluster against
 * Generated classes are cached for the whole session (``CODEGEN_CACHE_ENTRIES``),
   so a repeated plan compiles once, not once per run.
 
+A small write path is bound by its number of Spark jobs (each costs about
+0.05-0.1 s of driver overhead locally), not by its data, so the writers
+follow three rules:
+
+(a) A relation the driver already holds (a k-row centroid table, a
+    manifest row) is an Arrow local relation, built by
+    ``spark.createDataFrame`` from a ``pyarrow.Table``: it plans as
+    ``LocalTableScan`` and runs no job when read.  A Python list literal
+    plans as ``Scan ExistingRDD`` and runs a Python-RDD job on every action.
+(b) Every read of an artifact the engine wrote itself declares its schema:
+    schema inference is one job per read, and with a declared schema a
+    directory that holds no data file reads as empty instead of failing.
+(c) Each intermediate is computed once, and counters come from metadata
+    the engine already keeps (a sizes table, the rows the driver holds) or
+    from an ``observe`` on a write, not from a separate count job.
+
 Writers take their counters from the write itself (``DataFrame.observe``
 with a ``pyspark.sql.Observation``), not from a second scan of the input or
 of the written output.  An ``observe`` must sit ABOVE any

@@ -58,8 +58,8 @@ _CACHE: dict[tuple[str, str], str] = {}
 _VECTORS_SCHEMA = "vec_id long, embedding array<float>, label int, list_id bigint"
 _CENTROIDS_SCHEMA = "list_id bigint, centroid array<float>"
 # per-list population, computed at BUILD time (index health is write-time
-# metadata: the assignment relation is materialized during the build, so
-# the counts are one extra tiny agg there — while computing them at
+# metadata: the counts are one extra tiny aggregate over the partition
+# column of the version just written — while computing them at
 # monitor time means scanning n_lists partition dirs per tick, which is
 # file-count-bound, not data-bound: measured 3.9x/decade before this
 # artifact existed, r10)
@@ -84,16 +84,53 @@ def _ensure(spark: SparkSession, sf_dir: str, kind: str, builder) -> str:
 # ---------------------------------------------------------------- IVF ----
 
 
-def _list_sizes(assigned: DataFrame) -> DataFrame:
-    return assigned.groupBy("list_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
+def _write_sizes(spark: SparkSession, vectors_path: str, sizes_path: str) -> dict:
+    """Write the per-list sizes of the vectors just written to
+    ``vectors_path`` (a partition-column aggregate of that version) and
+    return the totals that rode on the write: ``nv`` vectors in ``nl``
+    lists."""
+    sizes_obs = Observation()
+    vecs = spark.read.schema(_VECTORS_SCHEMA).parquet(vectors_path)
+    vecs.groupBy("list_id").agg(F.count(F.lit(1)).cast("bigint").alias("n")).observe(
+        sizes_obs,
+        F.coalesce(F.sum("n"), F.lit(0)).alias("nv"),
+        F.count(F.lit(1)).alias("nl"),
+    ).coalesce(1).write.mode("overwrite").parquet(sizes_path)
+    return observed(sizes_obs, lambda: {"nv": 0, "nl": 0})
+
+
+def _stored_sizes(snap: dict[str, str]) -> list[int] | None:
+    """Vectors per list of a store version, from its sizes table (one row
+    per list), or None for a legacy store written before that table.
+
+    The table is one small file of index metadata on the store's local
+    file system (the pointer file next to it is read with open()), so the
+    driver reads it directly: no Spark job for a bounded metadata read."""
+    import pyarrow.parquet as pq
+
+    if not os.path.exists(snap["sizes"]):
+        return None
+    return pq.read_table(snap["sizes"], columns=["n"]).column("n").to_pylist()
 
 
 def _build_ivf(spark: SparkSession, sf_dir: str, path: str) -> None:
+    from log_vector_spark.functions.argmin import centroid_frame, ivf_assign_arrow
+
     emb = table(spark, "embeddings", sf_dir)
-    cents = search.make_centroids(emb).localCheckpoint(eager=True)
-    assigned = search.ivf_assign(emb, cents).localCheckpoint(eager=True)
+    pick = search.make_centroids(emb)
+    lid_type = pick.schema["list_id"].dataType
+    # the stride pick is bounded index metadata (~sqrt N rows): collected
+    # once, it is both the assignment's quantizer and the centroid table
+    # written below
+    rows = pick.collect()
+    cents = centroid_frame(
+        spark,
+        [r[0] for r in rows],
+        [r[1] for r in rows],
+        lid_type,
+        pick.schema["centroid"].dataType.elementType,
+    )
+    assigned = ivf_assign_arrow(emb, rows, lid_type)
     # one shuffle by the partition column before the write (the
     # sources/store.py index_incremental discipline): without it every
     # task writes a sliver into every list dir — n_tasks x n_lists small
@@ -107,12 +144,8 @@ def _build_ivf(spark: SparkSession, sf_dir: str, path: str) -> None:
         .parquet(os.path.join(path, "vectors"))
     )
     # bounded index metadata (sqrt-N rows): one file, not one per task
-    cents.repartition(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    _list_sizes(assigned).repartition(1).write.mode("overwrite").parquet(
-        os.path.join(path, "sizes")
-    )
+    cents.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    _write_sizes(spark, os.path.join(path, "vectors"), os.path.join(path, "sizes"))
 
 
 def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
@@ -821,21 +854,19 @@ def _retrain_ivf_store_locked(
 
     snap = resolve_ivf_snapshot(store_root)
     vecs = spark.read.schema(_VECTORS_SCHEMA).parquet(snap["vectors"])
-    # n_lists_before from the bounded sizes artifact (one row per list —
-    # the metadata _list_sizes exists to provide) instead of a full-store
-    # distinct scan; at 100 TB the difference is a corpus scan per retrain
-    # tick (optimization guide §1.2: don't compute what metadata already
-    # holds).  Legacy stores without a sizes table fall back to the scan.
-    if os.path.exists(snap["sizes"]):
-        n_lists_before = (
-            spark.read.schema(_SIZES_SCHEMA).parquet(snap["sizes"]).count()
-        )
-    else:
-        n_lists_before = vecs.select("list_id").distinct().count()
-    from log_vector_spark.catalog import cached_count
-
     base = vecs.select("vec_id", "embedding", "label")
-    n = cached_count(base)
+    # n_lists_before and n from the bounded sizes artifact (one row per
+    # list): at 100 TB a scan for them is a corpus scan per retrain tick
+    # (optimization guide §1.2: don't compute what metadata already
+    # holds).  Legacy stores without a sizes table fall back to the scans.
+    sizes = _stored_sizes(snap)
+    if sizes is not None:
+        n_lists_before, n = len(sizes), sum(sizes)
+    else:
+        from log_vector_spark.catalog import cached_count
+
+        n_lists_before = vecs.select("list_id").distinct().count()
+        n = cached_count(base)
     k_est = max(1, n // search.sqrt_stride(n))
     train_cap = 256 * k_est
     if n <= train_cap:
@@ -848,10 +879,9 @@ def _retrain_ivf_store_locked(
         base = base.localCheckpoint(eager=True)
     # store the refined centroids in the store's float layout and ASSIGN
     # under that same float form — the quantizer queries read must be the
-    # quantizer the assignment used, or probe/partition disagree
-    # make_centroids_kmeans returns a LITERAL k-row relation (r12 Arrow
-    # Lloyd kernel) — the old eager checkpoint that kept the Lloyd rounds
-    # off the recompute chain has nothing left to pin
+    # quantizer the assignment used, or probe/partition disagree.
+    # make_centroids_kmeans returns an Arrow local relation, so neither
+    # ivf_assign's collect nor the centroid write runs a Lloyd round again
     cents = search.make_centroids_kmeans(
         base, iters=iters, train_cap=train_cap, n=n
     ).select(
@@ -873,25 +903,16 @@ def _retrain_ivf_store_locked(
         .partitionBy("list_id")
         .parquet(os.path.join(store_root, f"vectors_v{version}"))
     )
-    cents.repartition(1).write.mode("overwrite").parquet(
+    cents.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(store_root, f"centroids_v{version}")
     )
     # return-dict stats ride on the sizes write (one row per list, derived
-    # from the written vectors, so they certify the same content): no
-    # read-back of the fresh store or of its sizes table
-    sizes_obs = Observation()
-    _list_sizes(
-        spark.read.schema(_VECTORS_SCHEMA).parquet(
-            os.path.join(store_root, f"vectors_v{version}")
-        )
-    ).observe(
-        sizes_obs,
-        F.coalesce(F.sum("n"), F.lit(0)).alias("nv"),
-        F.count(F.lit(1)).alias("nl"),
-    ).repartition(1).write.mode("overwrite").parquet(
-        os.path.join(store_root, f"sizes_v{version}")
+    # from the written vectors, so they certify the same content)
+    stats = _write_sizes(
+        spark,
+        os.path.join(store_root, f"vectors_v{version}"),
+        os.path.join(store_root, f"sizes_v{version}"),
     )
-    stats = observed(sizes_obs, lambda: {"nv": 0, "nl": 0})
     tmp = mp + ".tmp"
     with open(tmp, "w") as fh:
         _json.dump({"version": version}, fh)
@@ -950,9 +971,13 @@ def maintain_ivf(
     snap = resolve_ivf_snapshot(store_root)
     vecs = spark.read.schema(_VECTORS_SCHEMA).parquet(snap["vectors"])
     cents = spark.read.schema(_CENTROIDS_SCHEMA).parquet(snap["centroids"])
-    half = vecs.groupBy().agg(
-        F.floor(F.count(F.lit(1)) / 2).alias("h")
-    ).first()["h"]
+    # half of the vectors, from the sizes table when the version has one
+    sizes = _stored_sizes(snap)
+    half = (
+        sum(sizes) // 2
+        if sizes is not None
+        else vecs.groupBy().agg(F.floor(F.count(F.lit(1)) / 2).alias("h")).first()["h"]
+    )
     qerr = F.round(
         1 - F.round(cosine_similarity(F.col("embedding"), F.col("centroid")), 6), 6
     )

@@ -26,7 +26,7 @@ from collections.abc import Sequence
 from datetime import datetime, timezone
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from log_vector_spark.functions.vector import l2_norm
 from log_vector_spark.session import observed
@@ -71,14 +71,20 @@ def upsert_chunks(
     stream retries.  At 100 TB the existing side reads ONLY the id column
     (column pruning) and, when the store is partitioned on the same key the
     new batch arrives by, partition pruning bounds the anti-join to the
-    touched partitions.  Returns the number of rows appended.
+    touched partitions.  Returns the number of rows appended.  (An
+    append of no rows writes no file into a partitioned store, and one
+    schema-only file into an unpartitioned one.)
     """
     from pyspark.errors import AnalysisException
 
     spark = chunks.sparkSession
     target = os.path.join(path, "chunks")
     try:
-        existing_ids = spark.read.parquet(target).select(id_col)
+        # the id column is read with the batch's own type declared: no
+        # schema-inference job, and a store with no data file reads empty
+        existing_ids = (
+            spark.read.schema(T.StructType([chunks.schema[id_col]])).parquet(target).select(id_col)
+        )
     except AnalysisException as e:
         # ONLY a missing store means first write; any other read failure
         # (corrupt footer, permissions, transient IO) must raise — treating
@@ -88,10 +94,17 @@ def upsert_chunks(
             raise
         existing_ids = None
     fresh = chunks if existing_ids is None else chunks.join(existing_ids, id_col, "left_anti")
-    n_new = fresh.count()
-    if n_new:
-        write_chunks(fresh, path, mode="append", partition_col=partition_col)
-    return n_new
+    # the appended count rides on the write, so the batch is decoded once.
+    # Every observed row reaches the stage output, so a lost observe
+    # (session.observed) means nothing was appended.
+    appended = Observation()
+    write_chunks(
+        fresh.observe(appended, F.count(F.lit(1)).alias("n")),
+        path,
+        mode="append",
+        partition_col=partition_col,
+    )
+    return observed(appended, lambda: {"n": 0})["n"]
 
 
 def read_chunks(spark: SparkSession, path: str) -> DataFrame:
@@ -164,22 +177,22 @@ def write_manifest(
     embedding_model: str,
     chunk_size: int,
 ) -> None:
-    """K2: single-row manifest (reference index.py:461-478 field set)."""
-    row = [
-        (
-            datetime.now(timezone.utc).isoformat(),
-            repository,
-            embedding_type,
-            embedding_model,
-            chunk_size,
-            os.path.join(path, "chunks"),
-        )
-    ]
-    df = spark.createDataFrame(
-        row,
-        "indexed_at string, repository string, embedding_type string, "
-        "embedding_model string, chunk_size int, chunks_path string",
+    """K2: single-row manifest (reference index.py:461-478 field set),
+    built as an Arrow local relation so its write is the only job."""
+    import pyarrow as pa
+
+    row = {
+        "indexed_at": datetime.now(timezone.utc).isoformat(),
+        "repository": repository,
+        "embedding_type": embedding_type,
+        "embedding_model": embedding_model,
+        "chunk_size": chunk_size,
+        "chunks_path": os.path.join(path, "chunks"),
+    }
+    schema = pa.schema(
+        [(k, pa.int32() if k == "chunk_size" else pa.string()) for k in row]
     )
+    df = spark.createDataFrame(pa.Table.from_pylist([row], schema=schema))
     df.coalesce(1).write.mode("overwrite").json(os.path.join(path, "manifest"))
 
 
@@ -459,8 +472,12 @@ def index_incremental(
         stored_fps = None
     else:
         try:
+            # the store's own columns, declared: no schema-inference job
+            stored = [T.StructField(id_col, T.LongType()), docs.schema[source_col],
+                      T.StructField(INCR_FP_COL, T.StringType())]
             stored_fps = (
-                spark.read.parquet(target)
+                spark.read.schema(T.StructType(stored))
+                .parquet(target)
                 .select(id_col, source_col, INCR_FP_COL)
                 .distinct()
             )
@@ -582,7 +599,8 @@ def index_incremental(
     current_keys = fps.select(id_col, source_col, INCR_FP_COL)
     carry_obs = Observation()
     carry = (
-        spark.read.parquet(target)
+        spark.read.schema(fresh.schema)
+        .parquet(target)
         .filter(F.col(source_col).isin(touched))
         .join(current_keys, [id_col, source_col, INCR_FP_COL], "left_semi")
         .localCheckpoint(eager=True)

@@ -172,7 +172,7 @@ def _absent(path: str) -> bool:
     return "://" not in path and not os.path.isdir(path)
 
 
-def read_artifact(spark: SparkSession, path: str) -> DataFrame | None:
+def read_artifact(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame | None:
     """Read a parquet artifact back, or None when it is missing.
 
     Missing means the dir is absent OR holds no data file: an aborted first
@@ -180,17 +180,19 @@ def read_artifact(spark: SparkSession, path: str) -> DataFrame | None:
     infer.  Local paths are checked on the filesystem, skipping the hidden
     ``_``/``.`` names Spark skips, so a missing artifact costs no read.  URI
     stores (s3://, hdfs://) cannot be listed from the driver, so their read
-    is attempted and the same two failures map to None."""
+    is attempted and the same two failures map to None.  ``schema`` declares
+    the artifact's columns, which spares the schema-inference job."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if "://" not in path:
         for _root, dirs, files in os.walk(path):
             if any(not f.startswith(("_", ".")) for f in files):
-                return spark.read.parquet(path)
+                return reader.parquet(path)
             dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         return None
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         if not any(t in str(e) for t in _MISSING):
             raise
@@ -1005,6 +1007,18 @@ FP_PFX_COL = "fp_pfx"
 INGEST_BLOOM_BITS = 1 << 20
 INGEST_BLOOM_K = 3
 
+# Declared schemas of the training ingest's own artifacts (partition
+# columns included): a read with a schema runs no inference job, and an
+# epoch that wrote no rows reads as empty instead of failing inference.
+# A legacy (epoch-only) fps store reads under FPS_SCHEMA with a NULL fp_pfx.
+FPS_SCHEMA = f"fp string, doc_id long, source string, {FP_PFX_COL} string, epoch int"
+BLOOM_SCHEMA = "pos long, epoch int"
+STATS_SCHEMA = (
+    "source string, n_docs long, total_tokens long, sum_quality decimal(28,6), epoch int"
+)
+INDEX_SCHEMA = "vec_id long, embedding array<double>, list_id long, epoch int"
+CENTROIDS_SCHEMA = "list_id long, centroid array<double>"
+
 
 def _fp_bloom_positions(
     fp_col: str, m: int = INGEST_BLOOM_BITS, k: int = INGEST_BLOOM_K
@@ -1025,23 +1039,23 @@ def _fp_bloom_positions(
 
 
 def prior_fps_pruned(
-    spark: SparkSession, fps_dir: str, prefixes: list, epoch_id: int
+    spark: SparkSession, fps_dir: str, prefixes: list, epoch_id: int, legacy: bool = False
 ) -> DataFrame:
     """Partition-pruned prior-fingerprint scan: only the fp-prefix buckets
     in `prefixes` (driver literals, <= 16) and only epochs < `epoch_id`
     (replay-proof) are read — both filters land in PartitionFilters
     (pinned in tests/test_stream_training_ingest.py).
 
-    A store written before the fp_pfx level existed (pre-r8 epoch-only
-    layout — ADVICE r8) has no such column; the prefix filter then
-    degrades to a ROW filter on substring(fp, 1, 1) — same rows, no
+    A `legacy` store, written before the fp_pfx level existed (pre-r8
+    epoch-only layout — ADVICE r8), has no such column; the prefix filter
+    then degrades to a ROW filter on substring(fp, 1, 1) — same rows, no
     partition pruning — so a resumed stream keeps working over the old
     store instead of raising on the missing column."""
-    df = spark.read.parquet(fps_dir)
+    df = spark.read.schema(FPS_SCHEMA).parquet(fps_dir)
     pfx_filter = (
-        F.col(FP_PFX_COL).isin(list(prefixes))
-        if FP_PFX_COL in df.columns
-        else F.substring("fp", 1, 1).isin(list(prefixes))
+        F.substring("fp", 1, 1).isin(list(prefixes))
+        if legacy
+        else F.col(FP_PFX_COL).isin(list(prefixes))
     )
     return df.filter(pfx_filter & (F.col("epoch") < epoch_id)).select("fp")
 
@@ -1111,7 +1125,14 @@ def run_stream_training_ingest(
     current, so a replayed epoch never probes its own first write.  State
     on the stream itself: NONE (no watermark buffers) — all cross-epoch
     state lives in the store as data, the delta-folding discipline of
-    operators/maintenance.py.
+    operators/maintenance.py; the driver only keeps the frozen centroid
+    rows it picked or read, so later epochs assign without re-reading them.
+
+    One epoch evaluates each intermediate once (session.py rules a-c): the
+    Bloom probe is one checkpoint that flags every batch fp, the fps write
+    comes first, and this epoch's fps leaves, read back with the declared
+    schema, feed the Bloom delta and the survivor semi-join; the survivor
+    count rides on the stats write.
 
     Bounded dedup (VERDICT r7 item 3): the per-batch probe never scans the
     full fingerprint history.  A broadcast Bloom bitset (per-epoch
@@ -1127,11 +1148,14 @@ def run_stream_training_ingest(
     'n_lists', 'stats': {source: (n_docs, total_tokens, avg_quality)}}.
     """
     from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
 
+    from log_vector_spark.functions.argmin import centroid_frame, ivf_assign_arrow
     from log_vector_spark.operators import textops
     from log_vector_spark.operators.embed import DeterministicEmbedder
     from log_vector_spark.operators.events import hll_rho_rows
-    from log_vector_spark.operators.search import ivf_assign, make_centroids
+    from log_vector_spark.operators.search import make_centroids, sqrt_stride
+    from log_vector_spark.session import observed
 
     embedder = DeterministicEmbedder(dim=64)
     fps_dir = os.path.join(out_path, "fps")
@@ -1143,6 +1167,16 @@ def run_stream_training_ingest(
     # Pre-r8 stores are epoch-only; keep writing that layout (mixed depths
     # break partition discovery) and let prior_fps_pruned row-filter.
     legacy_fps = _fps_store_is_legacy(spark, fps_dir)
+    # the frozen quantizer's (list_id, centroid) rows, once this run holds
+    # them: frozen centroids never change, so later epochs assign against
+    # these rows instead of collecting the centroid table again
+    frozen: list = []
+
+    def embedded(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("doc_id").alias("vec_id"),
+            embedder.embed_col(F.col("text")).alias("embedding"),
+        )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         # ---- dedup grain: first-seen representative per fingerprint ----
@@ -1160,70 +1194,67 @@ def run_stream_training_ingest(
             )
             .withColumn(FP_PFX_COL, F.substring("fp", 1, 1))
         )
-        if _absent(fps_dir):
-            firsts = fps_b  # first epoch: no prior store (no noisy probe)
-        else:
+        firsts = fps_b  # first epoch: no prior store (no noisy probe)
+        if not _absent(fps_dir):
             try:
                 # ---- bounded history probe (VERDICT r7 item 3) ----
                 # (1) Bloom pre-filter: prior fps' bit positions (<= m
                 # rows, CONSTANT regardless of history) broadcast; a batch
                 # fp missing ANY of its k positions is DEFINITELY unseen
                 # (Bloom has no false negatives) and skips the exact probe.
-                definite_b = None
-                probable_b = fps_b
+                # Every batch fp gets a `probable` flag; the probe runs once
+                # (the checkpoint) and feeds both the prefix collect and
+                # the fps write below.
+                probed = fps_b.withColumn("probable", F.lit(True))
                 if not _absent(bloom_dir):
                     bits = (
-                        spark.read.parquet(bloom_dir)
+                        spark.read.schema(BLOOM_SCHEMA)
+                        .parquet(bloom_dir)
                         .filter(F.col("epoch") < epoch_id)  # replay-proof
                         .select("pos")
                         .distinct()
+                        .withColumn("hit", F.lit(True))
                     )
-                    probes = fps_b.select(
-                        "fp",
-                        F.posexplode(
-                            F.array(*_fp_bloom_positions("fp"))
-                        ).alias("salt", "pos"),
+                    # one probe row per (fp, salt) and distinct bits, so the
+                    # hit count per fp is the number of its positions set;
+                    # fps_b is already clustered by fp, so this groupBy
+                    # adds no shuffle
+                    probed = (
+                        fps_b.select(
+                            *fps_b.columns,
+                            F.explode(F.array(*_fp_bloom_positions("fp"))).alias("pos"),
+                        )
+                        .join(F.broadcast(bits), "pos", "left")
+                        .groupBy(*fps_b.columns)
+                        .agg((F.count("hit") == INGEST_BLOOM_K).alias("probable"))
                     )
-                    probable = (
-                        probes.join(F.broadcast(bits), "pos", "left_semi")
-                        .groupBy("fp")
-                        .agg(F.count_distinct("salt").alias("nhit"))
-                        .filter(F.col("nhit") == INGEST_BLOOM_K)
-                        .select("fp")
-                    )
-                    probable_b = fps_b.join(probable, "fp", "left_semi")
-                    definite_b = fps_b.join(probable, "fp", "left_anti")
+                probed = probed.localCheckpoint(eager=True)
                 # (2) exact confirmation of the probable hits only,
                 # PARTITION-PRUNED: literal fp-prefix IN + epoch < current
                 # both reach the scan as PartitionFilters.  The collect is
                 # bounded by the 16-value prefix alphabet.
-                pfx = [
-                    r[0] for r in probable_b.select(FP_PFX_COL).distinct().collect()
-                ]
+                probable = probed.filter(F.col("probable")).drop("probable")
+                pfx = [r[0] for r in probable.select(FP_PFX_COL).distinct().collect()]
+                firsts = probed.filter(~F.col("probable")).drop("probable")
                 if pfx:
-                    prior = prior_fps_pruned(spark, fps_dir, pfx, epoch_id)
-                    confirmed_new = probable_b.join(prior, "fp", "left_anti")
-                else:
-                    confirmed_new = probable_b
-                firsts = (
-                    confirmed_new
-                    if definite_b is None
-                    else definite_b.unionByName(confirmed_new)
-                )
+                    prior = prior_fps_pruned(spark, fps_dir, pfx, epoch_id, legacy_fps)
+                    firsts = firsts.unionByName(probable.join(prior, "fp", "left_anti"))
             except AnalysisException as e:
                 if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                     raise
                 firsts = fps_b
-        # materialize: `firsts` feeds its own store write AND the survivor
-        # semi-join below, and the overwrite below would invalidate the
-        # lazy read it derives from
-        firsts = firsts.localCheckpoint(eager=True)
         if legacy_fps:
             epoch_write(firsts.drop(FP_PFX_COL), fps_dir, epoch_id)
         else:
             # keyed by prefix: every later epoch's pruned probe re-reads
             # these leaves
             epoch_write(firsts, fps_dir, epoch_id, FP_PFX_COL)
+        # this epoch's fps, read back from the leaves just written
+        # (partition-pruned to epoch_id): the Bloom delta and the survivor
+        # semi-join below read them without evaluating the probe again
+        firsts = spark.read.schema(FPS_SCHEMA).parquet(fps_dir).filter(
+            F.col("epoch") == epoch_id
+        )
         # this epoch's Bloom delta: bit positions of the NEWLY stored fps
         # (OR-mergeable).  BOUNDED (<= INGEST_BLOOM_BITS rows, a constant)
         # and every later epoch re-reads ALL epochs' deltas — without one
@@ -1250,15 +1281,12 @@ def run_stream_training_ingest(
             .localCheckpoint(eager=True)  # feeds stats + hll + index below
         )
 
-        # a batch may gate out entirely (degenerate corpus) — skipping the
-        # empty epoch writes is replay-safe (nothing to replace) and keeps
-        # the artifact dirs readable (an all-empty partitioned write leaves
-        # a parquet dir with no schema to infer)
-        if survivors.isEmpty():
-            return
-
         # ---- mergeable sketch deltas ----
-        stats = survivors.groupBy("source").agg(
+        # the survivor count rides on the stats write (session.observed:
+        # every observed row reaches the stage output, so a lost observe
+        # means zero survivors)
+        counted = Observation()
+        stats = survivors.observe(counted, F.count(F.lit(1)).alias("n")).groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
             F.sum(F.col("quality").cast("decimal(18,6)")).alias("sum_quality"),
@@ -1266,6 +1294,12 @@ def run_stream_training_ingest(
         # bounded sketch deltas (n_sources rows / n_sources x m registers):
         # query-time folds re-read every epoch's deltas
         epoch_write(stats, stats_dir, epoch_id, BOUNDED)
+        n_survivors = observed(counted, lambda: {"n": 0})["n"]
+        # a batch may gate out entirely (degenerate corpus): its empty
+        # stats write wrote no leaf, and nothing else is written — no
+        # sketch rows, no index rows and never an empty centroid set
+        if n_survivors == 0:
+            return
         hll = (
             hll_rho_rows(
                 survivors.select("source", F.md5("text").alias("fp")),
@@ -1278,25 +1312,27 @@ def run_stream_training_ingest(
         epoch_write(hll, hll_dir, epoch_id, BOUNDED)
 
         # ---- encode + IVF index delta ----
-        vecs = survivors.select(
-            F.col("doc_id").alias("vec_id"),
-            embedder.embed_col(F.col("text")).alias("embedding"),
-        ).localCheckpoint(eager=True)  # embed once: centroids + assign reuse
-        if _absent(centroids_dir):
-            # freeze on the first surviving batch, persist for restarts;
-            # coalesce(1): bounded quantizer metadata (~sqrt-N rows) that
-            # EVERY later epoch re-reads — one file, not one per task (§6.2).
-            # The pick is counted on the write itself (no extra job).
-            picked = Observation()
-            frozen = make_centroids(vecs).observe(picked, F.count(F.lit(1)).alias("n"))
-            frozen.coalesce(1).write.mode("overwrite").parquet(centroids_dir)
-            if picked.get["n"] == 0:
-                lowest = vecs.orderBy("vec_id").limit(1)
-                lowest.select(
-                    F.col("vec_id").alias("list_id"), F.col("embedding").alias("centroid")
-                ).write.mode("overwrite").parquet(centroids_dir)
-        centroids = spark.read.parquet(centroids_dir)
-        assigned = ivf_assign(vecs, centroids)
+        # the index write is the embed UDF's only full consumer, so the
+        # vectors are not materialized; the freeze's stride pick filters
+        # on vec_id below the UDF and embeds only the picked rows
+        vecs = embedded(survivors)
+        if not frozen:
+            if _absent(centroids_dir):
+                # freeze on the first surviving batch, persist for
+                # restarts.  The pick is ~sqrt-N rows, collected once: it
+                # is both the quantizer the assignment uses and the
+                # centroid table written (coalesce(1): bounded metadata
+                # that every restart re-reads — one file, §6.2)
+                rows = make_centroids(vecs, every=sqrt_stride(n_survivors)).collect()
+                if not rows:
+                    rows = embedded(survivors.orderBy("doc_id").limit(1)).collect()
+                centroid_frame(
+                    spark, [r[0] for r in rows], [r[1] for r in rows], T.LongType()
+                ).coalesce(1).write.mode("overwrite").parquet(centroids_dir)
+            else:
+                rows = spark.read.schema(CENTROIDS_SCHEMA).parquet(centroids_dir).collect()
+            frozen.extend((r[0], r[1]) for r in rows)
+        assigned = ivf_assign_arrow(vecs, frozen, T.LongType())
         # keyed by list_id (r11, 5c61e59 — measured 186 sliver files for
         # one sf0.1 epoch before; 25 after)
         epoch_write(
@@ -1484,20 +1520,28 @@ def run_stream_neardup_ingest(
     return stored.select("doc_id", "source")
 
 
+def _group_counts(df: DataFrame | None, key: str) -> tuple[int, int]:
+    """(non-NULL distinct values of `key`, rows) of `df`, from one grouped
+    count collected (bounded by the key's cardinality); (0, 0) for a
+    missing artifact."""
+    if df is None:
+        return 0, 0
+    rows = df.groupBy(key).count().collect()
+    return sum(r[0] is not None for r in rows), sum(r[1] for r in rows)
+
+
 def read_training_ingest(spark: SparkSession, out_path: str) -> dict:
     """Fold the composed ingest's delta artifacts into the query-time view:
     one bounded aggregate per artifact (per-source rows for the stats,
-    one row each for fps and index — the same fold discipline as
-    run_stream_bm25_ingest's stats).  It reads the store rather than
-    counting inside the stream, so an ingest resumed from a checkpoint
-    still reports every epoch.  An artifact may be missing when every
-    batch gated out (degenerate corpus); it folds to empty instead of
-    failing schema inference.  ``epoch`` and ``list_id`` are never NULL
-    (a per-epoch literal and an argmin over the frozen centroids), so
-    their distinct counts need no NULL bucket."""
-    fps = read_artifact(spark, os.path.join(out_path, "fps"))
-    stats = read_artifact(spark, os.path.join(out_path, "stats_deltas"))
-    index = read_artifact(spark, os.path.join(out_path, "index"))
+    per-epoch rows for fps and per-list rows for the index — the same fold
+    discipline as run_stream_bm25_ingest's stats).  It reads the store
+    rather than counting inside the stream, so an ingest resumed from a
+    checkpoint still reports every epoch.  Every read declares its
+    artifact's schema.  An artifact may be missing when every batch gated
+    out (degenerate corpus); it folds to empty."""
+    fps = read_artifact(spark, os.path.join(out_path, "fps"), FPS_SCHEMA)
+    stats = read_artifact(spark, os.path.join(out_path, "stats_deltas"), STATS_SCHEMA)
+    index = read_artifact(spark, os.path.join(out_path, "index"), INDEX_SCHEMA)
     stats_rows = (
         stats.groupBy("source")
         .agg(
@@ -1511,16 +1555,8 @@ def read_training_ingest(spark: SparkSession, out_path: str) -> dict:
         if stats is not None
         else []
     )
-    n_epochs, n_fps = (
-        fps.agg(F.count_distinct("epoch"), F.count(F.lit(1))).first()
-        if fps is not None
-        else (0, 0)
-    )
-    index_rows, n_lists = (
-        index.agg(F.count(F.lit(1)), F.count_distinct("list_id")).first()
-        if index is not None
-        else (0, 0)
-    )
+    n_epochs, n_fps = _group_counts(fps, "epoch")
+    n_lists, index_rows = _group_counts(index, "list_id")
     return {
         "n_epochs": n_epochs,
         "n_unique_fps": n_fps,

@@ -146,3 +146,59 @@ def test_silhouette_bounded_and_counts_negatives(spark):
     for r in out:
         assert -1.0 <= r["min_silhouette"] <= 1.0
         assert -1.0 <= r["mean_silhouette"] <= 1.0
+
+
+def _old_update(assigned):
+    """The Lloyd update as one Spark plan: (cid, dim) means grouped back
+    into dim-ordered arrays — the spec cluster._update's driver-side
+    assembly is pinned against."""
+    from pyspark.sql import functions as F
+
+    dims = assigned.select("cid", F.posexplode("e").alias("dim", "x"))
+    per = dims.groupBy("cid", "dim").agg(
+        F.round(
+            F.sum(F.col("x").cast("decimal(28,20)")).cast("double") / F.count(F.lit(1)), 6
+        ).alias("xm")
+    )
+    return per.groupBy("cid").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "xm"))), lambda s: s.getField("xm")
+        ).alias("e")
+    )
+
+
+def test_kmeans_fit_centroids_match_the_old_plan_as_a_local_relation(spark):
+    """kmeans_fit's centroid table is an Arrow local relation with the
+    same rows, bit for bit, and the same (cid int, e array<double>) types
+    as the Spark-side update over the spec assignment; the empty-seed path
+    keeps the types."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from log_vector_spark.operators.cluster import _assign, kmeans_fit
+
+    vecs = [[float((i * 7) % 11) / 3, float((i * 5) % 13) / 7, 0.1 * i] for i in range(60)]
+    df = _vecs(spark, vecs)
+    k = 4
+    _, cents = kmeans_fit(df, k=k, iters=3)
+    c_schema = T.StructType(
+        [
+            T.StructField("cid", T.IntegerType(), False),
+            T.StructField("e", T.ArrayType(T.DoubleType()), True),
+        ]
+    )
+    assert cents.schema == c_schema
+    plan = cents._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    v = df.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e"))
+    c = spark.createDataFrame(
+        [(cid, [float(x) for x in vecs[cid]]) for cid in range(k)], c_schema
+    )
+    for _ in range(2):  # iters - 1 updates
+        rows = sorted(_old_update(_assign(v, c, "vec_id")).collect())
+        c = spark.createDataFrame([(r["cid"], r["e"]) for r in rows], c_schema)
+    assert sorted(map(tuple, cents.collect())) == sorted(map(tuple, c.collect()))
+
+    _, empty = kmeans_fit(df.where(F.lit(False)), k=k, iters=3)
+    assert empty.schema == c_schema and empty.collect() == []

@@ -512,21 +512,27 @@ def test_no_unreviewed_collect_sites_in_engine_source():
         # (file, stripped source line) — each reviewed as bounded
         ("streaming/pipeline.py", "touched = [r.list_id for r in assigned.select(\"list_id\").distinct().collect()]"),
         ("streaming/pipeline.py", ".collect()[0]"),
-        ("streaming/pipeline.py", "r[0] for r in probable_b.select(FP_PFX_COL).distinct().collect()"),
+        ("streaming/pipeline.py", "pfx = [r[0] for r in probable.select(FP_PFX_COL).distinct().collect()]"),
         ("streaming/pipeline.py", "r[0] for r in probable_b.select(BAND_PFX_COL).distinct().collect()"),
         ("streaming/pipeline.py", ".collect()"),  # read_training_ingest / psi fold: per-source rows
+        ("streaming/pipeline.py", "rows = df.groupBy(key).count().collect()"),  # per-epoch / per-list counts
+        # the training ingest's frozen quantizer: the ~sqrt(N)-row stride
+        # pick, its one-row fallback, or the persisted centroid table
+        ("streaming/pipeline.py", "rows = make_centroids(vecs, every=sqrt_stride(n_survivors)).collect()"),
+        ("streaming/pipeline.py", 'rows = embedded(survivors.orderBy("doc_id").limit(1)).collect()'),
+        ("streaming/pipeline.py", "rows = spark.read.schema(CENTROIDS_SCHEMA).parquet(centroids_dir).collect()"),
         ("operators/maintenance.py", "epochs = sorted(r[0] for r in live.select(epoch_col).distinct().collect())"),
         ("sources/export.py", "rows = src.mapInPandas(pack, _SHARD_SCHEMA).collect()  # bounded: 1/shard"),
         ("sources/index_store.py", ".collect()"),  # 1-row/cohort agg folds
+        ("sources/index_store.py", "rows = pick.collect()"),  # ~sqrt(N)-row stride pick
         # r12 Arrow argmin kernels: every collect below is the k-row (or
         # stride-sampled ~sqrt(N)-row) centroid relation — the IDENTICAL
         # payload the pre-r12 plans materialized on the driver as a
         # BroadcastExchange build side; never a corpus-scaled relation.
         ("operators/cluster.py", "seeds = v.orderBy(id_col).limit(k).collect()"),
-        ("operators/cluster.py", "_update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),"),
+        ("operators/cluster.py", "for cid, dim, xm in means.collect():  # k x dim rows"),
         ("operators/search.py", '(r[0], r[1]) for r in centroids.select("list_id", "centroid").collect()'),
         ("operators/search.py", "seeds = v.filter(F.col(vec_id) % every == 0).collect()"),
-        ("operators/search.py", "_update(assign_l2_arrow(train, cids, C, vec_id, cid_type)).collect(),"),
         ("sources/store.py", "rows = spark.read.json(os.path.join(path, \"manifest\")).collect()"),
     }
     found = set()
@@ -544,6 +550,59 @@ def test_no_unreviewed_collect_sites_in_engine_source():
     assert not extra, (
         "unreviewed .collect() site(s) in engine source — re-plan them "
         f"distributed or review them into the allowlist: {sorted(extra)}"
+    )
+
+
+def test_no_unreviewed_list_literal_relations_in_engine_source():
+    """`spark.createDataFrame(<Python list>)` plans as `Scan ExistingRDD`,
+    and every action on it runs a Python-RDD job; a relation the driver
+    already holds is built from a `pyarrow.Table` instead, which plans as
+    `LocalTableScan` and runs none (session.py rule a).  Every
+    `createDataFrame(` in the engine must be on this reviewed allowlist: an
+    Arrow-built relation, or a list literal in a registered query body or
+    a once-per-call constant where no write path evaluates it twice."""
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "log_vector_spark")
+    allowed = {
+        # (file, stripped source line)
+        # Arrow local relations: the k-row centroid helper, the manifest row
+        ("functions/argmin.py", "return spark.createDataFrame(table)"),
+        ("sources/store.py", "df = spark.createDataFrame(pa.Table.from_pylist([row], schema=schema))"),
+        ("catalog.py", "return spark.createDataFrame(casted.to_pandas())"),  # Arrow-backed pandas read fallback
+        # typed empty results of degenerate inputs
+        ("streaming/pipeline.py", 'return spark.createDataFrame([], "doc_id long, source string")'),
+        ("streaming/pipeline.py", 'return spark.createDataFrame([], "n_docs long, psi double, epoch long")'),
+        ("sources/export.py", "return spark.createDataFrame([], _SAMPLE_SCHEMA)"),
+        # one row / one row per shard, built once per call
+        ("streaming/pipeline.py", 'row = spark.createDataFrame([(int(na), round(psi, 6))], "n_docs long, psi double")'),
+        ("sources/export.py", "return spark.createDataFrame(rows, _SHARD_SCHEMA) if rows else spark.createDataFrame("),
+        # registered-query parameter grids
+        ("operators/curation.py", 'al = spark.createDataFrame([(0.25,), (0.5,), (0.75,), (1.0,)], "alpha double")'),
+        ("suites/events_suite.py", 'qs = spark.createDataFrame([(50,), (90,), (99,)], "q int")'),
+        ("suites/pipeline_suite.py", "return spark.createDataFrame("),
+        ("suites/vector_search.py", 'np_df = spark.createDataFrame([(1,), (2,), (4,), (8,)], ["nprobe"])'),
+        ("suites/vector_search.py", "spark_v = spark.createDataFrame([Row(v=[0.125] * 64)])"),
+        ("suites/vector_search.py", "return spark.createDataFrame("),
+        ("suites/vector_search.py", 'dims = spark.createDataFrame([(8,), (16,), (32,), (64,)], "d int")'),
+        ("suites/vector_search.py", 'dims = spark.createDataFrame([(8,), (16,)], "d int")'),
+        ("suites/relational_suite.py", "bands = spark.createDataFrame("),
+    }
+    found = set()
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            p = os.path.join(root, fn)
+            rel = os.path.relpath(p, pkg).replace(os.sep, "/")
+            with open(p) as fh:
+                for line in fh:
+                    if "createDataFrame(" in line:
+                        found.add((rel, line.strip()))
+    extra = found - allowed
+    assert not extra, (
+        "unreviewed createDataFrame( site(s) in engine source — build the "
+        f"relation from a pyarrow.Table or review it in: {sorted(extra)}"
     )
 
 

@@ -66,6 +66,34 @@ def test_build_index_counters_on_an_empty_dir(spark, tmp_path):
     assert _data_files(os.path.join(store, "chunks")) == []
 
 
+@pytest.mark.spark
+def test_build_index_append_counters_match_the_store(spark, tmp_path):
+    """--append: the appended count rides on the write and equals the
+    store's growth, also when nothing is new (the observe's stage is then
+    empty) and when the corpus has no text at all."""
+    from log_vector_spark.sources.store import read_chunks
+    from tools.index_cli import build_index
+
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    (repo / "blob.bin").write_bytes(b"\x00\x01 junk")
+    store = str(tmp_path / "store")
+    empty = build_index(spark, str(repo), store, chunk_size=200, append=True)
+    assert empty == {"chunks_written": 0, "files_errored": 1}
+    assert _data_files(os.path.join(store, "chunks")) == []
+
+    (repo / "app.log").write_text("alpha beta gamma delta\n" * 40, encoding="utf-8")
+    first = build_index(spark, str(repo), store, chunk_size=200, append=True)
+    n1 = read_chunks(spark, store).count()
+    assert first["chunks_written"] == n1 > 0
+    again = build_index(spark, str(repo), store, chunk_size=200, append=True)
+    assert again["chunks_written"] == 0
+    assert read_chunks(spark, store).count() == n1
+    (repo / "notes.txt").write_text("query join scan filter\n" * 25, encoding="utf-8")
+    more = build_index(spark, str(repo), store, chunk_size=200, append=True)
+    assert more["chunks_written"] == read_chunks(spark, store).count() - n1 > 0
+
+
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
@@ -158,6 +186,8 @@ def _write(spark, rows, schema, path, *keys):
 @pytest.mark.spark
 @pytest.mark.parametrize("missing", ["index", "stats_deltas", "both"])
 def test_read_training_ingest_with_missing_artifacts(spark, tmp_path, missing):
+    from decimal import Decimal as D
+
     from log_vector_spark.streaming.pipeline import read_training_ingest
 
     out = str(tmp_path / "ingest")
@@ -168,9 +198,10 @@ def test_read_training_ingest_with_missing_artifacts(spark, tmp_path, missing):
         _write(spark, index, "epoch int, vec_id long, list_id long",
                os.path.join(out, "index"), "epoch")
     if missing not in ("stats_deltas", "both"):
-        stats = [(0, "a", 2, 10, 1.5), (1, "a", 1, 4, 0.5), (1, "b", 3, 9, 2.25)]
+        # sum_quality is the sum of decimal(18,6) qualities, as the ingest writes it
+        stats = [(0, "a", 2, 10, D("1.5")), (1, "a", 1, 4, D("0.5")), (1, "b", 3, 9, D("2.25"))]
         _write(spark, stats,
-               "epoch int, source string, n_docs long, total_tokens long, sum_quality double",
+               "epoch int, source string, n_docs long, total_tokens long, sum_quality decimal(28,6)",
                os.path.join(out, "stats_deltas"), "epoch")
     res = read_training_ingest(spark, out)
     assert res["n_epochs"] == 3
